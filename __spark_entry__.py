@@ -117,38 +117,28 @@ def _keys(spark, sf_dir) -> DataFrame:
     return materialize(rx.surface_keys(_mentions(spark, sf_dir)), sf_dir, "kg_keys")
 
 
-def _cdcr_edges(spark, sf_dir) -> DataFrame:
+def _resolution(spark, sf_dir):
+    """Alias edges, components and identities from ONE
+    ``rx.resolve_keys`` call — the code bench.py and pipeline.run time —
+    written once per process (kg_cdcr_edges, kg_components,
+    kg_identities). The oracles read only kg_keys + kg_cdcr_edges and
+    re-derive CC with a recursive CTE, so the cache cannot mask a CC bug."""
     from anno_spark.operators import resolve as rx
-    from anno_spark.plans.materialize import materialize
+    from anno_spark.plans.materialize import materialize_all
 
-    keys = _keys(spark, sf_dir)
-    pairs = rx.candidate_pairs(rx.band_table(keys), keys)
-    return materialize(rx.score_pairs(pairs), sf_dir, "kg_cdcr_edges")
-
-
-def _comps(spark, sf_dir) -> DataFrame:
-    """Connected components, computed ONCE per process and cached as a
-    Spark-side parquet (five queries consume it). The oracles never read
-    this table — they re-derive CC from kg_keys + kg_cdcr_edges with a
-    recursive CTE, so the cache cannot mask a CC bug."""
-    from anno_spark.operators import resolve as rx
-    from anno_spark.plans.materialize import materialize
-
-    return materialize(
-        rx.connected_components(_keys(spark, sf_dir), _cdcr_edges(spark, sf_dir)),
-        sf_dir,
-        "kg_components",
+    return rx.Resolution(
+        *materialize_all(
+            spark,
+            sf_dir,
+            ("kg_cdcr_edges", "kg_components", "kg_identities"),
+            lambda: rx.resolve_keys(_keys(spark, sf_dir)),
+        )
     )
 
 
-def _idents(spark, sf_dir) -> DataFrame:
-    from anno_spark.operators import resolve as rx
-
-    return rx.identities_table(_keys(spark, sf_dir), _comps(spark, sf_dir))
-
-
 def _keyed_surfaces(spark, sf_dir) -> DataFrame:
-    return _keys(spark, sf_dir).join(_comps(spark, sf_dir), "key_id").select(
+    comps = _resolution(spark, sf_dir).components
+    return _keys(spark, sf_dir).join(comps, "key_id").select(
         "surface", "entity_type", F.col("component_id").alias("identity_id")
     )
 
@@ -207,7 +197,7 @@ def _scalarized_identities(idents: DataFrame) -> DataFrame:
 
 
 def q_kg_identities(spark, sf_dir):
-    return _scalarized_identities(_idents(spark, sf_dir)).select(
+    return _scalarized_identities(_resolution(spark, sf_dir).identities).select(
         "identity_id", "canonical_name", "entity_type", "n_mentions", "n_docs",
         "n_surfaces", "aliases", "kb_id", "kb_description", "first_seen",
     )
@@ -216,7 +206,7 @@ def q_kg_identities(spark, sf_dir):
 def q_kg_nodes(spark, sf_dir):
     from anno_spark.operators import graph as g
 
-    nodes = g.nodes_table(_idents(spark, sf_dir))
+    nodes = g.nodes_table(_resolution(spark, sf_dir).identities)
     return nodes.withColumn("aliases", F.array_join("aliases", "|"))
 
 
@@ -224,7 +214,7 @@ def q_kg_top_clusters(spark, sf_dir):
     from anno_spark.operators import resolve as rx
 
     top = rx.top_clusters(
-        _idents(spark, sf_dir),
+        _resolution(spark, sf_dir).identities,
         min_mentions=TOP_CLUSTER_MIN_MENTIONS,
         limit=TOP_CLUSTER_LIMIT,
     )
@@ -237,7 +227,7 @@ def q_kg_top_clusters(spark, sf_dir):
 def q_kg_edges(spark, sf_dir):
     from anno_spark.operators import graph as g
 
-    nodes = g.nodes_table(_idents(spark, sf_dir))
+    nodes = g.nodes_table(_resolution(spark, sf_dir).identities)
     return g.edges_table(
         _triples(spark, sf_dir), _keyed_surfaces(spark, sf_dir), nodes
     )
@@ -266,7 +256,7 @@ def _graph_tables(spark, sf_dir):
     from anno_spark.operators import graph as g
     from anno_spark.plans.materialize import materialize
 
-    nodes = g.nodes_table(_idents(spark, sf_dir))
+    nodes = g.nodes_table(_resolution(spark, sf_dir).identities)
     edges = g.edges_table(
         _triples(spark, sf_dir), _keyed_surfaces(spark, sf_dir), nodes
     )

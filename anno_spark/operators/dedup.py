@@ -223,7 +223,9 @@ def _collect_sig_matrices(
     order = np.argsort(pdf["doc_id"].to_numpy(), kind="mergesort")
     ids = pdf["doc_id"].to_numpy()[order]
     sig = np.array(pdf["signature"].tolist(), dtype=np.int64)[order]
-    bh = np.array(pdf["band_hashes"].tolist(), dtype=np.int64)[order]
+    # (n_docs, n_bands) even on 0 docs, where np.array([]) would be 1-D
+    bh = np.array(pdf["band_hashes"].tolist(), dtype=np.int64)
+    bh = bh.reshape(len(ids), n_bands)[order]
     valid = np.ones(bh.shape, dtype=bool)
     for b, h in dropped_buckets or ():
         valid[:, b] &= bh[:, b] != h

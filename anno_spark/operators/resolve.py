@@ -11,12 +11,19 @@ nodes are ``(lower(text), entity_type)`` keys. On a 10¹²-mention corpus
 that drops the clustering problem from 10¹² nodes to ~10⁸ distinct
 surfaces — mentions re-attach to their key's component with one hash join.
 
-Stages (each a narrow DataFrame op; shuffles only where marked):
+Stages, assembled only by :func:`resolve_keys` (the entry point of
+``resolve_mentions``, ``plans/pipeline.run`` and the oracled queries);
+shuffles only where marked:
 
 1. ``surface_keys``     — distinct (surface, entity_type) + mention counts
-                          [shuffle: groupBy key]
-2. ``band_table``       — minhash/LSH band hashes per key (pandas UDF,
-                          exact FNV-1a parity with cdcr.rs:350-402)
+                          [shuffle: groupBy key; run by the caller]
+2. ``band_signatures``  — minhash/LSH band hashes per key (pandas UDF,
+                          exact FNV-1a parity with cdcr.rs:350-402), then
+                          THE gate: one counting checkpoint of the band
+                          table. ≤ DRIVER_RESOLVE_MAX_KEYS keys and ≤
+                          DRIVER_RESOLVE_MAX_PAIRS estimated pair visits
+                          (Σ C(|bucket|, 2)) run 3-6 on the driver
+                          (Python scoring, ``uf_labels``); else:
 3. ``candidate_pairs``  — self-equi-join on (band, band_hash)
                           [shuffle: the LSH join; AQE skew-split on;
                           optional max_bucket_size cap for stop-surface
@@ -25,13 +32,16 @@ Stages (each a narrow DataFrame op; shuffles only where marked):
                           JVM expressions (no Python in the pair hot path)
 5. ``connected_components`` — iterative min-label propagation with
                           per-iteration localCheckpoint (SURVEY §4 #2)
-6. ``identities``       — per-component canonicalization + KB link
+6. ``identities_table`` — per-component canonicalization + KB link
                           [shuffle: groupBy component]
+
+Both branches return the same :class:`Resolution` (tests/test_driver_resolve.py).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -354,14 +364,14 @@ def _word_set(col):
     return F.array_distinct(F.filter(arr, lambda w: w != F.lit("")))
 
 
-def string_similarity_expr(a, b):
-    """JVM-side string_similarity: 1.0 exact → 0.8 containment →
-    word-set Jaccard. Inputs are already lowercased surfaces."""
-    wa, wb = _word_set(a), _word_set(b)
-    inter = F.size(F.array_intersect(wa, wb))
-    union = F.size(F.array_union(wa, wb))
+def _similarity(a, b, words_a, words_b, nw_a, nw_b):
+    """string_similarity's CASE chain over surfaces ``a``/``b`` and their
+    word sets (sizes ``nw_a``/``nw_b``): 1.0 exact → 0.8 containment →
+    word-set Jaccard. The one JVM form of the decision."""
+    ni = F.size(F.array_intersect(words_a, words_b))
+    union = nw_a + nw_b - ni
     jacc = F.when(union == 0, F.lit(0.0)).otherwise(
-        inter.cast("double") / union.cast("double")
+        ni.cast("double") / union.cast("double")
     )
     return (
         F.when((a == "") & (b == ""), F.lit(1.0))
@@ -373,38 +383,27 @@ def string_similarity_expr(a, b):
     )
 
 
+def string_similarity_expr(a, b):
+    """JVM-side string_similarity over already-lowercased surfaces: the
+    :func:`score_pairs` expression with the word sets built inline."""
+    wa, wb = _word_set(a), _word_set(b)
+    return _similarity(a, b, wa, wb, F.size(wa), F.size(wb))
+
+
 def score_pairs(
     pairs: DataFrame,
     min_similarity: float = MIN_SIMILARITY,
     require_type_match: bool = True,
 ) -> DataFrame:
-    """should_cluster (cdcr.rs:539-548) → surviving alias edges.
-
-    Uses the precomputed word sets from :func:`candidate_pairs` when
-    available (one array allocation per pair); falls back to the
-    self-contained expression otherwise.
-    """
-    if "words_a" in pairs.columns:
-        a, b = F.col("surface_a"), F.col("surface_b")
-        ni = F.size(F.array_intersect("words_a", "words_b"))
-        union = F.col("nw_a") + F.col("nw_b") - ni
-        jacc = F.when(union == 0, F.lit(0.0)).otherwise(
-            ni.cast("double") / union.cast("double")
-        )
-        sim = (
-            F.when((a == "") & (b == ""), F.lit(1.0))
-            .when((a == "") | (b == ""), F.lit(0.0))
-            .when(a == b, F.lit(1.0))
-            .when(F.instr(a, b) > 0, F.lit(0.8))
-            .when(F.instr(b, a) > 0, F.lit(0.8))
-            .otherwise(jacc)
-        )
-        scored = pairs.withColumn("similarity", sim)
-    else:
-        scored = pairs.withColumn(
-            "similarity",
-            string_similarity_expr(F.col("surface_a"), F.col("surface_b")),
-        )
+    """should_cluster (cdcr.rs:539-548) → surviving alias edges, scored
+    on the word sets :func:`candidate_pairs` precomputes (one array
+    allocation per pair)."""
+    scored = pairs.withColumn(
+        "similarity",
+        _similarity(
+            *map(F.col, ("surface_a", "surface_b", "words_a", "words_b", "nw_a", "nw_b"))
+        ),
+    )
     if require_type_match:
         scored = scored.where(F.col("type_a") == F.col("type_b"))
     return scored.where(F.col("similarity") >= F.lit(min_similarity)).select(
@@ -485,12 +484,16 @@ def _driver_union_find(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     from the node table (candidate pairs ⊆ keys; dedup pairs ⊆ sig
     table), so the contract is documented rather than paid for with two
     extra semi-joins per invocation on a 10⁸-row edge table."""
-    import pandas as pd
-
     pdf = edges.select("key_a", "key_b").toPandas()
-    uniq, labels = uf_labels(pdf["key_a"].to_numpy(), pdf["key_b"].to_numpy())
-    spark = nodes.sparkSession
-    comp = spark.createDataFrame(
+    return _labeled_nodes(
+        nodes, *uf_labels(pdf["key_a"].to_numpy(), pdf["key_b"].to_numpy())
+    )
+
+
+def _labeled_nodes(nodes: DataFrame, uniq, labels) -> DataFrame:
+    """``uf_labels`` output → (key_id, component_id) over ``nodes`` with
+    one broadcast join; ids absent from the edge list keep their own."""
+    comp = nodes.sparkSession.createDataFrame(
         pd.DataFrame({"key_id": uniq, "component_id": labels}),
         schema="key_id bigint, component_id bigint",
     )
@@ -695,79 +698,51 @@ def top_clusters(
 
 
 # --------------------------------------------------------------------------
-# end-to-end convenience
+# the one entry point
 
-# Key-count gate for the all-driver resolve fast path below: band/pair/
+
+class Resolution(NamedTuple):
+    """:func:`resolve_keys` output on either branch: alias edges (key_a <
+    key_b, similarity), components (key_id, component_id = min key_id
+    reachable) and identities (:func:`identities_table` columns)."""
+
+    edges: DataFrame
+    components: DataFrame
+    identities: DataFrame
+
+
+# Key-count gate for the driver branch of resolve_keys: band/pair/
 # score/CC work on a few thousand distinct surfaces costs milliseconds
 # in-process but ~7 Spark jobs of fixed scheduler+broadcast latency
 # distributed (measured 1.6 s of the sf1.0 bench on a 2.5k-key,
-# 1.3k-edge graph). 20k keys ≈ tens of ms of driver scoring on typical
-# bucket shapes; past the gate (true web scale) the distributed path
-# runs unchanged.
+# 1.3k-edge graph). Past the gate (true web scale) the distributed
+# branch runs.
 DRIVER_RESOLVE_MAX_KEYS = 20_000
 
+# Work gate for the same branch, on the band vectors it collected:
+# Σ C(|bucket|, 2) over kept buckets = pair visits of the Python loop,
+# which runs 0.7-2.6M visits/s (one Xeon core), so ≤ ~1.4 s — about the
+# distributed branch's fixed latency. A ~1.4k-key hot bucket exceeds it.
+DRIVER_RESOLVE_MAX_PAIRS = 1_000_000
 
-def _driver_resolve_components(
-    keys: DataFrame,
-    band_sigs: DataFrame,
-    max_bucket_size: int | None,
-    min_similarity: float,
-    require_type_match: bool,
-) -> tuple[DataFrame, DataFrame]:
-    """Small-graph fast path for the whole candidate→score→CC→identities
-    chain: collect the (already materialized) key rows and band-hash
-    vectors, generate bucket pairs, score with the pure-Python
-    string_similarity (the reference implementation the JVM expression
-    is differentially pinned against —
-    tests/test_spark_pipeline.py::test_string_similarity_expr_parity), and
-    union-find in-process. Returns ``(components, identities)`` with the
-    same (key_id, component_id) labeling as candidate_pairs →
-    score_pairs → connected_components —
-    component_id = min key_id reachable. Bucket-cap semantics replicated
-    exactly (buckets with > cap members dropped for candidate
-    generation). The scoring decision is inlined on the STORED surfaces
-    (no re-lowercasing — the distributed expression scores them as
-    stored too): exact → 1.0, containment → 0.8, else word-set Jaccard,
-    with ``split()`` ≡ the JVM ``_word_set`` (differentially pinned)."""
-    spark = keys.sparkSession
-    krows = keys.collect()  # full rows: the identities build below needs
-    # n_mentions/n_docs/first_seen alongside surface/entity_type
-    brows = band_sigs.collect()
-    bh_by_key = {r["key_id"]: r["band_hashes"] for r in brows}
-    buckets: dict[tuple[int, int], list] = {}
-    for r in krows:
-        for band, h in enumerate(bh_by_key[r["key_id"]]):
-            buckets.setdefault((band, h), []).append(r)
-    words = {r["key_id"]: frozenset(r["surface"].split()) for r in krows}
-    parent: dict[int, int] = {}
 
-    def find(x: int) -> int:
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != root:
-            parent[x], x = root, parent[x]
-        return root
-
+def _driver_scored_pairs(buckets, min_similarity, require_type_match):
+    """The driver branch's pair loop: kept buckets of (key_id, surface,
+    entity_type, word set) → [(key_a, key_b, similarity)], key_a < key_b,
+    each pair scored once by the :func:`_similarity` decision on the
+    STORED surfaces, ``split()`` ≡ the JVM ``_word_set`` (pinned by
+    tests/test_spark_pipeline.py::test_string_similarity_expr_parity)."""
     seen: set[tuple[int, int]] = set()
-    for members in buckets.values():
-        if len(members) < 2:
-            continue
-        if max_bucket_size is not None and len(members) > max_bucket_size:
-            continue
-        for i in range(len(members)):
-            a = members[i]
-            for j in range(i + 1, len(members)):
-                b = members[j]
-                ka, kb = a["key_id"], b["key_id"]
-                if ka > kb:
-                    ka, kb = kb, ka
-                if (ka, kb) in seen:
+    edges = []
+    for members in buckets:
+        for i, (ka, sa, ta, wa) in enumerate(members):
+            for kb, sb, tb, wb in members[i + 1 :]:
+                pair = (ka, kb) if ka < kb else (kb, ka)
+                if pair in seen:
                     continue
-                seen.add((ka, kb))
-                if require_type_match and a["entity_type"] != b["entity_type"]:
+                seen.add(pair)
+                if require_type_match and ta != tb:
                     continue
-                sa, sb = a["surface"], b["surface"]
                 if sa == sb:
                     sim = 1.0
                 elif not sa or not sb:
@@ -775,31 +750,58 @@ def _driver_resolve_components(
                 elif sb in sa or sa in sb:
                     sim = 0.8
                 else:
-                    wa, wb = words[a["key_id"]], words[b["key_id"]]
                     union = len(wa | wb)
                     sim = len(wa & wb) / union if union else 0.0
-                if sim < min_similarity:
-                    continue
-                ra, rb = find(ka), find(kb)
-                if ra != rb:
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
-    comp_rows = [(int(k), int(find(k))) for k in sorted(parent)]
-    # identities built from the SAME collected rows (r06): the
-    # distributed identities_table is one groupBy + a broadcast KB join
-    # over a table this path has already collected — ~3 more jobs of
-    # fixed latency for in-hand data. Exact replication of its
+                if sim >= min_similarity:
+                    edges.append((*pair, sim))
+    return edges
+
+
+def _driver_resolve(
+    keys: DataFrame,
+    band_sigs: DataFrame,
+    max_bucket_size: int | None,
+    min_similarity: float,
+    require_type_match: bool,
+) -> Resolution | None:
+    """The driver branch: collect the (already materialized) key rows and
+    band-hash vectors, score the bucket pairs in-process, ``uf_labels``
+    for CC, identities from the same rows. Bucket-cap semantics as in
+    :func:`candidate_pairs` (buckets with > cap members dropped for
+    candidate generation). None when the pair visits exceed
+    ``DRIVER_RESOLVE_MAX_PAIRS``: the caller then runs the distributed
+    branch."""
+    from anno_spark.core.document import KNOWN_KB_ENTITIES
+
+    krows = keys.collect()  # full rows: the identities build below needs
+    # n_mentions/n_docs/first_seen alongside surface/entity_type
+    bh_by_key = {k: bh for k, bh in band_sigs.collect()}
+    buckets: dict[tuple[int, int], list] = {}
+    for r in krows:
+        member = (r["key_id"], r["surface"], r["entity_type"])
+        member += (frozenset(r["surface"].split()),)
+        for band, h in enumerate(bh_by_key[r["key_id"]]):
+            buckets.setdefault((band, h), []).append(member)
+    cap = len(krows) if max_bucket_size is None else max_bucket_size
+    kept = [m for m in buckets.values() if 1 < len(m) <= cap]
+    if sum(len(m) * (len(m) - 1) // 2 for m in kept) > DRIVER_RESOLVE_MAX_PAIRS:
+        return None
+    edges = pd.DataFrame(
+        _driver_scored_pairs(kept, min_similarity, require_type_match),
+        columns=["key_a", "key_b", "similarity"],
+    )
+    uniq, labels = uf_labels(edges["key_a"], edges["key_b"])
+    # identities built from the SAME collected rows: the distributed
+    # identities_table is one groupBy + a broadcast KB join over a table
+    # this branch has already collected. Exact replication of its
     # semantics: canonical pick = max by (n_mentions, surface,
     # entity_type) — Python tuple comparison ≡ Spark struct comparison
     # (longs by value; strings by code point ≡ UTF-8 binary order);
     # aliases = sorted distinct surfaces (same order property); KB
     # lookup on the lowercased canonical (surfaces are already
-    # lowercase); first_seen = min, round-tripped as session-local
-    # datetimes. Pinned column-for-column by
-    # tests/test_driver_resolve.py against the distributed build.
-    from anno_spark.core.document import KNOWN_KB_ENTITIES
-
-    comp_of = dict(comp_rows)
+    # lowercase); first_seen = min over non-null values, like F.min,
+    # round-tripped as session-local datetimes.
+    comp_of = dict(zip(uniq.tolist(), labels.tolist()))
     groups: dict[int, list] = {}
     for r in krows:
         groups.setdefault(comp_of.get(r["key_id"], r["key_id"]), []).append(r)
@@ -810,6 +812,7 @@ def _driver_resolve_components(
             rows, key=lambda r: (r["n_mentions"], r["surface"], r["entity_type"])
         )
         kb = KNOWN_KB_ENTITIES.get(pick["surface"].lower())
+        stamps = [r["first_seen"] for r in rows if has_ts and r["first_seen"] is not None]
         ident_rows.append(
             (
                 int(cid),
@@ -820,7 +823,7 @@ def _driver_resolve_components(
                 len(rows),
                 sorted({r["surface"] for r in rows}),
             )
-            + ((min(r["first_seen"] for r in rows),) if has_ts else ())
+            + ((min(stamps, default=None),) if has_ts else ())
             + ((kb[0], kb[1]) if kb else (None, None))
         )
     ident_schema = (
@@ -830,22 +833,57 @@ def _driver_resolve_components(
         + ("first_seen timestamp, " if has_ts else "")
         + "kb_id string, kb_description string"
     )
-    idents = spark.createDataFrame(ident_rows, schema=ident_schema)
-    if not comp_rows:
-        return (
-            keys.select("key_id", F.col("key_id").alias("component_id")),
-            idents,
+    spark = keys.sparkSession
+    return Resolution(
+        spark.createDataFrame(edges, "key_a bigint, key_b bigint, similarity double"),
+        _labeled_nodes(keys, uniq, labels).localCheckpoint(eager=False),
+        spark.createDataFrame(ident_rows, schema=ident_schema),
+    )
+
+
+def resolve_keys(
+    keys: DataFrame,
+    min_similarity: float = MIN_SIMILARITY,
+    require_type_match: bool = True,
+    max_bucket_size: int | None = None,
+) -> Resolution:
+    """:func:`surface_keys` rows → :class:`Resolution`. The only place
+    the band → pairs → score → CC → identities chain is assembled; the
+    gate and both branches are described in the module docstring.
+    ``keys`` is read several times: pass it materialized (checkpoint or
+    parquet)."""
+    from anno_spark.plans.sizing import force_fallback
+
+    # unexploded band vectors, cached: explode feeds the self-join, the
+    # array form feeds the driver branch and the small path's map-side
+    # emit-once pair dedup
+    band_sigs = band_signatures(keys).localCheckpoint(eager=False)
+    # ONE job materializes keys+band_sigs+bands and yields the key count
+    # for both the driver gate and candidate_pairs' broadcast gate
+    bands, n_band_rows = checkpoint_count(
+        band_sigs.select(
+            "key_id", F.posexplode("band_hashes").alias("band", "band_hash")
         )
-    comp = spark.createDataFrame(
-        comp_rows, schema="key_id bigint, component_id bigint"
     )
-    comps = keys.select("key_id").join(
-        F.broadcast(comp), "key_id", "left"
-    ).select(
-        "key_id",
-        F.coalesce("component_id", F.col("key_id")).alias("component_id"),
+    if n_band_rows // CDCR_NUM_BANDS <= DRIVER_RESOLVE_MAX_KEYS and not force_fallback():
+        res = _driver_resolve(
+            keys, band_sigs, max_bucket_size, min_similarity, require_type_match
+        )
+        if res is not None:
+            return res
+    pairs = candidate_pairs(
+        bands,
+        keys,
+        max_bucket_size=max_bucket_size,
+        band_sigs=band_sigs,
+        _n_band_rows=n_band_rows,
     )
-    return comps, idents
+    edges = score_pairs(pairs, min_similarity, require_type_match)
+    edges = edges.localCheckpoint(eager=False)
+    # checkpointed: identities and the callers' joins all read the labels,
+    # and each would otherwise re-run CC
+    comps = connected_components(keys, edges).localCheckpoint(eager=False)
+    return Resolution(edges, comps, identities_table(keys, comps))
 
 
 def resolve_mentions(
@@ -854,58 +892,17 @@ def resolve_mentions(
     require_type_match: bool = True,
     max_bucket_size: int | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """mentions → (keys_with_components, identities, mention_identity).
-
-    mention_identity maps every mention back to its identity with one
-    hash join on the surface key — the only touch of the full mention
-    table after extraction.
-
-    ``keys`` and ``components`` are materialized once (localCheckpoint)
-    before fan-out: both are consumed by three downstream branches, and
-    they are tiny relative to the corpus (distinct surfaces ≪ mentions).
-    The checkpoints are LAZY — the first consumer's action materializes
-    them and later consumers read the cache, saving one dedicated
-    materialization job each (fixed-cost latency that at a 140 ms/job
-    scheduler floor is pure waste; VERDICT r03 next #4). On a real
-    cluster these become snapshot tables (SnapshotStore).
-    """
-    from anno_spark.plans.sizing import force_fallback
-
+    """mentions → (keys_with_components, identities, mention_identity):
+    :func:`surface_keys` → :func:`resolve_keys` → one hash join on the
+    surface key mapping every mention back to its identity, the only
+    touch of the full mention table after extraction. ``keys`` is
+    checkpointed LAZILY (resolve_keys' counting job materializes it); on
+    a real cluster it becomes a snapshot table (SnapshotStore)."""
     keys = surface_keys(mentions).localCheckpoint(eager=False)
-    # unexploded band vectors, cached: explode feeds the self-join, the
-    # array form feeds the small path's map-side emit-once pair dedup
-    band_sigs = band_signatures(keys).localCheckpoint(eager=False)
-    bands = band_sigs.select(
-        "key_id", F.posexplode("band_hashes").alias("band", "band_hash")
+    res = resolve_keys(keys, min_similarity, require_type_match, max_bucket_size)
+    keyed = keys.join(res.components, "key_id")
+    mention_identity = mentions.withColumn("surface", F.lower(F.col("text"))).join(
+        keyed.select("surface", "entity_type", F.col("component_id").alias("identity_id")),
+        ["surface", "entity_type"],
     )
-    # one job materializes keys+band_sigs+bands and yields the key count
-    # for BOTH the driver-resolve gate and candidate_pairs' broadcast gate
-    bands, n_band_rows = checkpoint_count(bands)
-    n_keys = n_band_rows // CDCR_NUM_BANDS
-    if n_keys <= DRIVER_RESOLVE_MAX_KEYS and not force_fallback():
-        # all-driver fast path: pair-gen + scoring + CC + identities
-        # in-process (see _driver_resolve_components) — ~10 Spark jobs
-        # of broadcast/shuffle fixed latency collapse into two
-        # cache-read collects
-        comps, idents = _driver_resolve_components(
-            keys, band_sigs, max_bucket_size, min_similarity, require_type_match
-        )
-        comps = comps.localCheckpoint(eager=False)
-    else:
-        pairs = candidate_pairs(
-            bands,
-            keys,
-            max_bucket_size=max_bucket_size,
-            band_sigs=band_sigs,
-            _n_band_rows=n_band_rows,
-        )
-        edges = score_pairs(pairs, min_similarity, require_type_match)
-        comps = connected_components(keys, edges).localCheckpoint(eager=False)
-        idents = identities_table(keys, comps)
-    keyed = keys.join(comps, "key_id").select(
-        "surface", "entity_type", F.col("component_id").alias("identity_id")
-    )
-    mention_identity = mentions.withColumn(
-        "surface", F.lower(F.col("text"))
-    ).join(keyed, ["surface", "entity_type"])
-    return keys.join(comps, "key_id"), idents, mention_identity
+    return keyed, res.identities, mention_identity

@@ -58,6 +58,20 @@ def materialize(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     return df.sparkSession.read.parquet(path)
 
 
+def materialize_all(
+    spark: SparkSession, sf_dir: str, names, compute
+) -> list[DataFrame]:
+    """:func:`materialize` for several tables that come from ONE
+    computation: ``compute()`` returns one DataFrame per name and runs
+    only when some of them are not yet written in this process."""
+    paths = [oracle_path(sf_dir, n) for n in names]
+    if not _written.issuperset(paths):
+        for df, path in zip(compute(), paths):
+            df.write.mode("overwrite").parquet(path)
+            _written.add(path)
+    return [spark.read.parquet(p) for p in paths]
+
+
 def reset() -> None:
     """Forget the written-set (tests use this to force rewrites)."""
     _written.clear()

@@ -104,17 +104,9 @@ def run(
         return res
 
     def compute_components():
-        keys = rx.surface_keys(mentions).localCheckpoint()
-        band_sigs = rx.band_signatures(keys).localCheckpoint(eager=False)
-        bands = band_sigs.select(
-            "key_id", F.posexplode("band_hashes").alias("band", "band_hash")
-        )
-        pairs = rx.candidate_pairs(
-            bands, keys, max_bucket_size=max_bucket_size, band_sigs=band_sigs
-        )
-        edges = rx.score_pairs(pairs, min_similarity, require_type_match)
-        comps = rx.connected_components(keys, edges)
-        return keys.join(comps, "key_id")
+        keys = rx.surface_keys(mentions).localCheckpoint(eager=False)
+        res = rx.resolve_keys(keys, min_similarity, require_type_match, max_bucket_size)
+        return keys.join(res.components, "key_id")
 
     keyed = stage("surface_components", compute_components)
     if stop_after == "surface_components":

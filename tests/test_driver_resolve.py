@@ -2,18 +2,21 @@
 under the DRIVER_RESOLVE_MAX_KEYS gate, resolve_mentions must produce
 byte-identical (key, component) labelings and identities whether the
 candidate→score→CC chain runs on the driver or distributed (gate forced
-off), with and without a bucket cap."""
+off), with and without a bucket cap, with and without (null) timestamps
+and on empty input; and that a hot bucket under the key gate trips the
+pair-count gate instead of the Python pair loop."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-
 import datetime
 
+import pytest
 
-def _mentions(spark, with_ts=False):
+
+def _mentions(spark, ts=False):
+    """``ts``: False (no warc_ts column), True (every mention stamped),
+    "all_null" (every stamp null), "mixed_null" (every third null) or
+    "empty" (no mentions; stamped schema)."""
     # near-identical distinct surfaces (shared 3-gram mass → hot common
     # LSH buckets), two hot families plus containment/jaccard pairs,
     # cross-type collisions, KB-hit surfaces, and canonical tie cases
@@ -29,15 +32,18 @@ def _mentions(spark, with_ts=False):
         ("https://ex.com/f", "Angela Merkel", "PER"),  # KB hit (Q567)
         ("https://ex.com/g", "Berlin", "LOC"),  # KB hit (Q64)
     ]
-    if not with_ts:
+    if ts is False:
         return spark.createDataFrame(
             rows, "url string, text string, entity_type string"
         )
     base = datetime.datetime(2024, 1, 1)
-    rows_ts = [
-        (u, t, e, base + datetime.timedelta(seconds=i * 37))
-        for i, (u, t, e) in enumerate(rows)
-    ]
+
+    def stamp(i):
+        if ts == "all_null" or (ts == "mixed_null" and i % 3 == 0):
+            return None
+        return base + datetime.timedelta(seconds=i * 37)
+
+    rows_ts = [(u, t, e, stamp(i)) for i, (u, t, e) in enumerate(rows) if ts != "empty"]
     return spark.createDataFrame(
         rows_ts, "url string, text string, entity_type string, warc_ts timestamp"
     )
@@ -58,37 +64,87 @@ def _ident_key(r):
     )
 
 
+def _resolved(rx, m, cap):
+    keyed, idents, _ = rx.resolve_mentions(m, max_bucket_size=cap)
+    return (
+        {(r["surface"], r["entity_type"], r["component_id"]) for r in keyed.collect()},
+        {_ident_key(r) for r in idents.collect()},
+        idents.columns,
+    )
+
+
 @pytest.mark.parametrize("cap", [None, 16])
-@pytest.mark.parametrize("with_ts", [False, True])
-def test_driver_resolve_matches_distributed(spark, monkeypatch, cap, with_ts):
+@pytest.mark.parametrize("ts", [False, True, "all_null", "mixed_null", "empty"])
+def test_driver_resolve_matches_distributed(spark, monkeypatch, cap, ts):
     from anno_spark.operators import resolve as rx
 
-    m = _mentions(spark, with_ts=with_ts)
-    keyed_fast, idents_fast, _ = rx.resolve_mentions(m, max_bucket_size=cap)
-    fast = {
-        (r["surface"], r["entity_type"], r["component_id"])
-        for r in keyed_fast.collect()
-    }
-    assert sorted(idents_fast.columns) == sorted(
+    m = _mentions(spark, ts=ts)
+    fast, fast_idents, columns = _resolved(rx, m, cap)
+    assert sorted(columns) == sorted(
         ["identity_id", "canonical_name", "entity_type", "n_mentions",
          "n_docs", "n_surfaces", "aliases", "kb_id", "kb_description"]
-        + (["first_seen"] if with_ts else [])
+        + ([] if ts is False else ["first_seen"])
     )
-    fast_idents = {_ident_key(r) for r in idents_fast.collect()}
 
     monkeypatch.setattr(rx, "DRIVER_RESOLVE_MAX_KEYS", -1)
-    keyed_slow, idents_slow, _ = rx.resolve_mentions(m, max_bucket_size=cap)
-    slow = {
-        (r["surface"], r["entity_type"], r["component_id"])
-        for r in keyed_slow.collect()
-    }
-    slow_idents = {_ident_key(r) for r in idents_slow.collect()}
+    slow, slow_idents, _ = _resolved(rx, m, cap)
 
     assert fast == slow
     assert fast_idents == slow_idents
+    if ts == "empty":
+        assert not fast and not fast_idents
+        return
     # sanity: clustering happened and the KB join matched something
     assert len({c for (_, _, c) in fast}) < len(fast)
     assert any(k[7] == "Q567" for k in fast_idents)
+    if ts == "mixed_null":  # null singletons stay null, components skip nulls
+        assert {k[9] is None for k in fast_idents} == {True, False}
+
+
+def test_hot_bucket_exceeds_pair_gate(spark, monkeypatch):
+    """One hot LSH bucket under the key gate: the driver branch must see
+    Σ C(|bucket|, 2) > DRIVER_RESOLVE_MAX_PAIRS on the band vectors it
+    collected and fall through to the distributed branch without running
+    its Python pair loop, with the force-fallback output."""
+    from anno_spark.operators import resolve as rx
+
+    # "a" * k for k ≥ 3 has the single 3-gram "aaa", so each of the five
+    # band buckets of "aaa" holds all 700 keys
+    n = 700
+    assert rx.CDCR_NUM_BANDS * n * (n - 1) // 2 > rx.DRIVER_RESOLVE_MAX_PAIRS
+    assert n < rx.DRIVER_RESOLVE_MAX_KEYS
+    rows = [(f"https://ex.com/h{k}", "a" * k, "ORG") for k in range(3, n + 3)]
+    rows += [(f"https://ex.com/p{i}", f"acme corporation unit {i}", "ORG") for i in range(60)]
+    m = spark.createDataFrame(rows, "url string, text string, entity_type string")
+
+    def pair_loop(*args):
+        raise AssertionError("the Python pair loop ran on a hot bucket")
+
+    monkeypatch.setattr(rx, "_driver_scored_pairs", pair_loop)
+    gated, gated_idents, _ = _resolved(rx, m, None)
+    monkeypatch.setenv("SPARK_GRAFT_FORCE_FALLBACK", "1")
+    forced, forced_idents, _ = _resolved(rx, m, None)
+    assert gated == forced
+    assert gated_idents == forced_idents
+    assert len({c for (_, _, c) in gated}) < len(gated)
+
+
+def test_cdcr_oracles_match_on_distributed_branch(spark, sf_dir, duck, monkeypatch):
+    """The oracled CDCR queries with every size gate forced to "too big":
+    test_oracle_match checks resolve_keys' driver branch at the test
+    scale, this checks its distributed branch (and the distributed CC
+    loop) against the same DuckDB oracles."""
+    from test_oracle_parity import test_oracle_match
+
+    from anno_spark.plans import materialize
+
+    monkeypatch.setenv("SPARK_GRAFT_FORCE_FALLBACK", "1")
+    materialize.reset()
+    try:
+        for name in ("kg_identities", "kg_nodes", "kg_top_clusters", "kg_edges"):
+            test_oracle_match(spark, sf_dir, duck, name)
+    finally:
+        materialize.reset()
 
 
 def test_minhash_driver_cluster_assembly_matches_distributed(spark, monkeypatch):
@@ -113,3 +169,14 @@ def test_minhash_driver_cluster_assembly_matches_distributed(spark, monkeypatch)
     slow = {(r["cluster_id"], r["doc_id"]) for r in dd.minhash_near_duplicates(docs).collect()}
     assert fast == slow
     assert len(fast) > 0
+
+
+def test_minhash_near_duplicates_empty_input(spark):
+    """0 docs: the fused small path collects empty signature matrices and
+    must still build its bucket index and return no clusters."""
+    import anno_spark.operators.dedup as dd
+
+    docs = spark.createDataFrame([], "doc_id bigint, text string")
+    out = dd.minhash_near_duplicates(docs)
+    assert out.columns == ["cluster_id", "doc_id"]
+    assert out.collect() == []

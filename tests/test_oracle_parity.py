@@ -8,24 +8,9 @@ from __future__ import annotations
 
 import math
 
-import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con
 
 
 def _normalize(v):
