@@ -235,10 +235,7 @@ def _collect_sig_matrices(
 def minhash_candidate_pairs(
     sigs: DataFrame,
     max_bucket_size: int | None = 1000,
-    broadcast_max_docs: int = 1_000_000,
     min_est_jaccard: float | None = None,
-    n_bands: int = DOC_NUM_BANDS,
-    sig_len: int = DOC_NUM_BANDS * DOC_ROWS_PER_BAND,
 ) -> DataFrame:
     """LSH band join → candidate (doc_a, doc_b) pairs with estimated
     Jaccard = fraction of agreeing signature rows (JVM zip_with).
@@ -255,21 +252,20 @@ def minhash_candidate_pairs(
     n²/2 pairs per bucket), and in a shuffled equi-join one hot
     (band, band_hash) key lands in ONE task — AQE can split skewed
     partitions but not a single key. When the docs fit a broadcast —
-    gated on ESTIMATED BYTES (rows × band/signature geometry via
-    ``n_bands``/``sig_len``, ADVICE r02: a wide config can blow the
-    broadcast under any fixed doc-count gate) AND ``broadcast_max_docs``
-    — the build side is broadcast and the probe side round-robin-spread,
-    so the explosion parallelizes across all slots (measured 6× on a
-    near-dup-heavy 5k corpus). Beyond that, true web scale: shuffled
-    join + the bucket cap bounds per-key work.
+    gated on ESTIMATED BYTES (rows × the band/signature geometry,
+    ADVICE r02: a wide config can blow the broadcast under any fixed
+    doc-count gate) — the build side is broadcast and the probe side
+    round-robin-spread, so the explosion parallelizes across all slots
+    (measured 6× on a near-dup-heavy 5k corpus). Beyond that, true web
+    scale: shuffled join + the bucket cap bounds per-key work.
     """
     # one job: lazy checkpoint + exact count (VERDICT r02 wrong #4)
     sigs, n_docs = checkpoint_count(sigs)
     # small path broadcasts the exploded band table (~24 B/row) and both
     # signature+band-hash tables (8 B/element, twice)
-    small = n_docs <= broadcast_max_docs and fits_broadcast(
-        n_docs, n_bands * 24 + 2 * (sig_len + n_bands) * 8 + 48
-    )
+    n_bands = DOC_NUM_BANDS
+    sig_len = DOC_NUM_BANDS * DOC_ROWS_PER_BAND
+    small = fits_broadcast(n_docs, n_bands * 24 + 2 * (sig_len + n_bands) * 8 + 48)
     maybe_broadcast = F.broadcast if small else (lambda df: df)
     bands = sigs.select(
         "doc_id", F.posexplode("band_hashes").alias("band", "band_hash")
@@ -280,12 +276,12 @@ def minhash_candidate_pairs(
         if small:
             # The DROPPED bucket set is tiny by construction (each holds
             # > max_bucket_size members, so there are at most
-            # n_docs·n_bands/cap of them — 8k at the 1M-doc gate). As a
-            # driver-side literal it makes bucket survival decidable
-            # MAP-SIDE, which (a) replaces the sizes broadcast join with
-            # a codegen'd filter and (b) enables the emit-once dedup
-            # below. One tiny collect job replaces the sizes broadcast
-            # exchange job.
+            # n_docs·n_bands/cap of them — ~2.4k at the ~305k docs the
+            # broadcast budget admits). As a driver-side literal it
+            # makes bucket survival decidable MAP-SIDE, which (a)
+            # replaces the sizes broadcast join with a codegen'd filter
+            # and (b) enables the emit-once dedup below. One tiny
+            # collect job replaces the sizes broadcast exchange job.
             dropped_buckets = [
                 (int(r["band"]), int(r["band_hash"]))
                 for r in sizes.where(F.col("n") > max_bucket_size).collect()

@@ -245,12 +245,6 @@ def _gen_extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
     from anno_spark.corpus import page_record
 
     for pdf in batches:
-        inner = pd.DataFrame(
-            {
-                "url": [],
-                "text": [],
-            }
-        )
         recs = [page_record(int(i)) for i in pdf["id"]]
         inner = pd.DataFrame(
             {"url": [r["url"] for r in recs], "text": [r["text"] for r in recs]}

@@ -158,7 +158,6 @@ def candidate_pairs(
     bands: DataFrame,
     keys: DataFrame,
     max_bucket_size: int | None = None,
-    broadcast_max_keys: int = 1_000_000,
     _pre_dedup: bool = False,
     band_sigs: DataFrame | None = None,
     _n_band_rows: int | None = None,
@@ -168,8 +167,8 @@ def candidate_pairs(
     only ids and hashes through the shuffle).
 
     Join strategy: checkpointed inputs hide size stats from Catalyst, so
-    when the distinct-key count fits comfortably in a broadcast
-    (≤ ``broadcast_max_keys``) the right side and the attribute
+    when the distinct keys fit the broadcast byte budget
+    (:func:`fits_broadcast`) the right side and the attribute
     dimension get explicit broadcast hints — measured 6× over the
     sort-merge plan at 2·10⁴ keys / 10⁸ joined rows. Beyond the
     threshold (true web scale, ~10⁸ surfaces) it falls back to the
@@ -210,9 +209,7 @@ def candidate_pairs(
     else:
         bands, n_band_rows = checkpoint_count(bands)
     n_keys = n_band_rows // CDCR_NUM_BANDS
-    small = n_keys <= broadcast_max_keys and fits_broadcast(
-        n_keys, CDCR_BYTES_PER_KEY_EST
-    )
+    small = fits_broadcast(n_keys, CDCR_BYTES_PER_KEY_EST)
     maybe_broadcast = F.broadcast if small else (lambda df: df)
     emit_once = (
         small
@@ -469,11 +466,12 @@ def uf_labels(key_a, key_b):
 
 
 def _driver_union_find(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Small-graph fast path: union-find with path compression on the
-    driver over the (already materialized) edge list, then ONE broadcast
-    join back onto the still-distributed node table. Only edges are
-    collected — nodes can be arbitrarily large (singletons keep their own
-    id via coalesce). Produces byte-identical output to the distributed
+    """Small-graph fast path: :func:`uf_labels` (vectorized
+    hook-and-pointer-jump with edge contraction) on the driver over the
+    (already materialized) edge list, then ONE broadcast join back onto
+    the still-distributed node table. Only edges are collected — nodes
+    can be arbitrarily large (singletons keep their own id via
+    coalesce). Produces byte-identical output to the distributed
     loop: component_id = min key_id reachable.
 
     PRECONDITION (shared with :func:`connected_components`): every edge
@@ -510,27 +508,24 @@ def _labeled_nodes(nodes: DataFrame, uniq, labels) -> DataFrame:
 DRIVER_CC_MAX_EDGES = 5_000_000
 
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    max_iterations: int = 25,
-    driver_max_edges: int | None = DRIVER_CC_MAX_EDGES,
-) -> DataFrame:
+def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """→ (key_id, component_id) where component_id = min key_id reachable.
 
     Edge endpoints MUST be a subset of ``nodes`` (see
     :func:`_driver_union_find` for why the two paths diverge otherwise).
 
-    Small graphs (≤ ``driver_max_edges`` edges after scoring) take the
-    driver union-find fast path — the same size-gated pattern as a
-    broadcast join, saving ~10 shuffle barriers of fixed latency.
+    Small graphs (≤ ``DRIVER_CC_MAX_EDGES`` edges after scoring) take the
+    driver fast path — the same size-gated pattern as a broadcast join,
+    saving ~10 shuffle barriers of fixed latency.
 
     At scale: min-label propagation with pointer jumping — each round a
     node adopts the minimum label among itself and its neighbors (edge
     step), then labels chase their own label's label (label-compression
-    step, the union-find path-halving analogue) — convergence in
-    O(log diameter) rounds instead of O(diameter). One localCheckpoint
-    per round truncates lineage (SURVEY §4 #2).
+    step). The loop runs until no label changes; labels only ever
+    decrease, so it always terminates. Pointer jumping often shortens
+    the run, but the round count is bounded only by about the graph
+    diameter (a 100-node path with shuffled ids takes 45 rounds). One
+    localCheckpoint per round truncates lineage (SURVEY §4 #2).
     """
     # materialize edges first: symmetrization reads them twice, and the
     # edge lineage typically contains the expensive LSH join + scoring.
@@ -539,11 +534,7 @@ def connected_components(
     from anno_spark.plans.sizing import force_fallback
 
     edges, n_edges = checkpoint_count(edges)
-    if (
-        driver_max_edges is not None
-        and n_edges <= driver_max_edges
-        and not force_fallback()
-    ):
+    if n_edges <= DRIVER_CC_MAX_EDGES and not force_fallback():
         return _driver_union_find(nodes, edges)
     # no dedup on the symmetrized table: every in-repo producer emits
     # DISTINCT key_a < key_b pairs (emit-once band dedup / min-shared-
@@ -578,7 +569,7 @@ def connected_components(
         .localCheckpoint()
     )
 
-    for it in range(max_iterations):
+    while True:
         neighbor_min = (
             sym.join(labels, sym["src"] == labels["key_id"])
             .select(F.col("dst").alias("key_id"), "component_id")

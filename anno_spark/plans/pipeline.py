@@ -66,7 +66,6 @@ def run(
     require_type_match: bool = True,
     max_bucket_size: int | None = None,
     stop_after: str | None = None,
-    with_metrics: bool = True,
 ) -> PipelineResult:
     """Run (or resume) the full pipeline. When ``store`` is None, runs
     fully in-memory (tests / small corpora)."""
@@ -84,8 +83,7 @@ def run(
             bucket_by = (32, "identity_id") if name in ("identities",) else None
             store.commit(name, df, bucket_by=bucket_by)
             df = store.load(spark, name)
-            if with_metrics:
-                _commit_metrics(store, spark, name, df)
+            _commit_metrics(store, spark, name, df)
         res.computed_stages.append(name)
         res.tables[name] = df
         return df

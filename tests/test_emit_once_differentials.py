@@ -15,9 +15,14 @@ only plan-level assertions:
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+# the shuffled branch's dropDuplicates(["key_a", "key_b"]) aggregate
+PAIR_DEDUP = re.compile(r"HashAggregate\(keys=\[key_a#\d+L?, key_b#\d+L?\]")
 
 
 def _mentions(spark):
@@ -30,8 +35,25 @@ def _mentions(spark):
     return spark.createDataFrame(rows, "url string, text string, entity_type string")
 
 
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _shuffled_pairs(monkeypatch, bands, keys, cap):
+    """candidate_pairs on the shuffled dropDuplicates branch, selected
+    the way the forced-fallback sweep selects it; fails unless that
+    branch was planned."""
+    from anno_spark.operators import resolve as rx
+
+    with monkeypatch.context() as m:
+        m.setenv("SPARK_GRAFT_FORCE_FALLBACK", "1")
+        out = rx.candidate_pairs(bands, keys, max_bucket_size=cap)
+        assert PAIR_DEDUP.search(_plan(out)), _plan(out)
+        return {(r["key_a"], r["key_b"]) for r in out.select("key_a", "key_b").collect()}
+
+
 class TestResolveEmitOnceDifferential:
-    def test_emit_once_matches_shuffled_dropduplicates_path(self, spark):
+    def test_emit_once_matches_shuffled_dropduplicates_path(self, spark, monkeypatch):
         from anno_spark.operators import resolve as rx
 
         keys = rx.surface_keys(_mentions(spark)).localCheckpoint()
@@ -43,16 +65,14 @@ class TestResolveEmitOnceDifferential:
         emit_once = rx.candidate_pairs(
             bands, keys, max_bucket_size=cap, band_sigs=band_sigs
         )
+        assert not PAIR_DEDUP.search(_plan(emit_once))
         rows = emit_once.select("key_a", "key_b").collect()
         pairs = {(r["key_a"], r["key_b"]) for r in rows}
         assert len(rows) == len(pairs), "a pair was emitted from >1 band"
-        shuffled = rx.candidate_pairs(
-            bands, keys, max_bucket_size=cap, broadcast_max_keys=1
-        )
-        ref = {(r["key_a"], r["key_b"]) for r in shuffled.select("key_a", "key_b").collect()}
+        ref = _shuffled_pairs(monkeypatch, bands, keys, cap)
         assert pairs == ref and len(pairs) > 0
 
-    def test_emit_once_survives_dropped_first_band(self, spark):
+    def test_emit_once_survives_dropped_first_band(self, spark, monkeypatch):
         # also at a cap where SOME buckets drop but pairs survive via a
         # later band, and without any cap-induced drops at all
         from anno_spark.operators import resolve as rx
@@ -69,12 +89,7 @@ class TestResolveEmitOnceDifferential:
                     bands, keys, max_bucket_size=cap, band_sigs=band_sigs
                 ).select("key_a", "key_b").collect()
             }
-            ref = {
-                (r["key_a"], r["key_b"])
-                for r in rx.candidate_pairs(
-                    bands, keys, max_bucket_size=cap, broadcast_max_keys=1
-                ).select("key_a", "key_b").collect()
-            }
+            ref = _shuffled_pairs(monkeypatch, bands, keys, cap)
             assert emit_once == ref, f"cap={cap}"
 
 

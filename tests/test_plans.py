@@ -170,11 +170,14 @@ class TestSkewProofBandJoins:
         # probe side spread before the explosion
         assert "RoundRobinPartitioning" in plan or "Exchange RoundRobin" in plan
 
-    def test_minhash_large_fallback_runs_and_matches(self, spark, sf_dir):
+    def test_minhash_large_fallback_runs_and_matches(
+        self, spark, sf_dir, monkeypatch
+    ):
         """The web-scale path (no explicit broadcast hints, dedup before
         scoring) must produce the same pair set as the broadcast path.
-        (No plan-shape assert: on genuinely tiny data Catalyst may still
-        pick a broadcast from its own stats — correctly.)"""
+        (The only plan-shape assert is that the fused small-path scorer
+        is absent: on genuinely tiny data Catalyst may still pick a
+        broadcast join from its own stats — correctly.)"""
         import os
 
         from anno_spark.operators.dedup import (
@@ -188,16 +191,19 @@ class TestSkewProofBandJoins:
             (r["doc_a"], r["doc_b"], round(r["est_jaccard"], 6))
             for r in minhash_candidate_pairs(sigs, min_est_jaccard=0.8).collect()
         }
-        large = {
-            (r["doc_a"], r["doc_b"], round(r["est_jaccard"], 6))
-            for r in minhash_candidate_pairs(
-                sigs, broadcast_max_docs=1, min_est_jaccard=0.8
-            ).collect()
-        }
+        with monkeypatch.context() as m:
+            m.setenv("SPARK_GRAFT_FORCE_FALLBACK", "1")
+            forced = minhash_candidate_pairs(sigs, min_est_jaccard=0.8)
+            # the fused scorer runs only on the broadcast branch
+            assert "MapInPandas" not in _plan(forced)
+            large = {
+                (r["doc_a"], r["doc_b"], round(r["est_jaccard"], 6))
+                for r in forced.collect()
+            }
         assert small == large and len(small) > 0
 
     def test_minhash_emit_once_matches_dedup_with_dropped_buckets(
-        self, spark, sf_dir
+        self, spark, sf_dir, monkeypatch
     ):
         """The small path dedups band-duplicate pairs MAP-SIDE (emit once
         from the pair's first shared SURVIVING band, dropped buckets
@@ -220,12 +226,14 @@ class TestSkewProofBandJoins:
         rows = small.collect()
         pairs = {(r["doc_a"], r["doc_b"]) for r in rows}
         assert len(rows) == len(pairs), "a pair was emitted from >1 band"
-        large = {
-            (r["doc_a"], r["doc_b"])
-            for r in minhash_candidate_pairs(
-                sigs, max_bucket_size=5, broadcast_max_docs=1, min_est_jaccard=0.8
-            ).collect()
-        }
+        with monkeypatch.context() as m:
+            m.setenv("SPARK_GRAFT_FORCE_FALLBACK", "1")
+            forced = minhash_candidate_pairs(
+                sigs, max_bucket_size=5, min_est_jaccard=0.8
+            )
+            # the fused scorer runs only on the broadcast branch
+            assert "MapInPandas" not in _plan(forced)
+            large = {(r["doc_a"], r["doc_b"]) for r in forced.collect()}
         assert pairs == large and len(pairs) > 0
 
     def test_minhash_small_path_has_no_pair_shuffle(self, spark, sf_dir):
