@@ -13,9 +13,16 @@ Behavioral re-implementation of the reference's LSH blocker
 
 Values are u64; :func:`to_i64` converts to two's-complement signed for
 storage in Spark ``bigint`` columns (equality-preserving).
+
+:func:`bucket_index` + :func:`bucket_pairs` are the one in-process way
+to turn a band-hash matrix into distinct candidate pairs (bucket cap
+applied, each pair emitted once); the CDCR driver branch and the
+document near-dup small path both use them.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 _M64 = (1 << 64) - 1
 _FNV_OFFSET = 0xCBF29CE484222325
@@ -113,3 +120,104 @@ def signature_similarity(sig1: list[int], sig2: list[int]) -> float:
 def to_i64(v: int) -> int:
     """u64 → signed 64-bit (two's complement) for Spark bigint columns."""
     return v - (1 << 64) if v >= (1 << 63) else v
+
+
+# --------------------------------------------------------------------------
+# LSH bucket index + emit-once pair expansion (the in-process pair kernel)
+
+
+class BucketIndex(NamedTuple):
+    """Buckets of a band-hash matrix, per band: ``flat`` holds the member
+    row indices of every KEPT bucket (ascending within a bucket,
+    buckets concatenated), ``boff``/``blen`` slice one bucket out of it,
+    and ``bucket_of``/``rank_of`` (n × n_bands) give each row's bucket
+    ordinal and position per band — ordinal -1 where the row's bucket
+    was dropped by the cap."""
+
+    flat: object
+    boff: object
+    blen: object
+    bucket_of: object
+    rank_of: object
+
+    def pair_visits(self) -> int:
+        """Σ C(|bucket|, 2) over kept buckets: the pairs a full expansion
+        visits before emit-once removes the band duplicates."""
+        return int((self.blen * (self.blen - 1) // 2).sum())
+
+
+def bucket_index(bh, cap: int | None = None) -> BucketIndex:
+    """(n × n_bands) int64 band-hash matrix → :class:`BucketIndex`.
+
+    A bucket is a run of equal hashes in one band's column. Runs longer
+    than ``cap`` are dropped (the stop-surface cap: such a bucket only
+    ever yields blocking noise); ``cap=None`` keeps every run. The
+    stable sort keeps members in row order, so ``rank_of`` + 1 slices
+    a row's strictly-greater bucket partners directly."""
+    import numpy as np
+
+    n, n_bands = bh.shape
+    bucket_of = np.full((n, n_bands), -1, dtype=np.int64)
+    rank_of = np.zeros((n, n_bands), dtype=np.int64)
+    flats, boffs, blens = [], [], []
+    off = n_buckets = 0
+    for b in range(n_bands):
+        order = np.argsort(bh[:, b], kind="stable")
+        hashes = bh[order, b]
+        is_start = np.ones(n, dtype=bool)
+        is_start[1:] = hashes[1:] != hashes[:-1]
+        run_start = np.flatnonzero(is_start)
+        run_len = np.diff(np.append(run_start, n))
+        run_id = np.cumsum(is_start) - 1
+        rank = np.arange(n) - run_start[run_id]
+        if cap is not None:
+            kept = run_len <= cap
+            member = kept[run_id]
+            order, rank = order[member], rank[member]
+            run_id = (np.cumsum(kept) - 1)[run_id[member]]
+            run_len = run_len[kept]
+        flats.append(order)
+        boffs.append(off + np.cumsum(run_len) - run_len)
+        blens.append(run_len)
+        bucket_of[order, b] = n_buckets + run_id
+        rank_of[order, b] = rank
+        n_buckets += len(run_len)
+        off += len(order)
+    return BucketIndex(
+        np.concatenate(flats),
+        np.concatenate(boffs),
+        np.concatenate(blens),
+        bucket_of,
+        rank_of,
+    )
+
+
+def bucket_pairs(index: BucketIndex, ii, band):
+    """Emit-once pair expansion: each (row ``ii[j]``, band ``band[j]``)
+    expands to its strictly-greater partners in that row's kept bucket,
+    and a pair survives only from its FIRST shared kept band → ``(ia,
+    ib)`` row-index arrays, ``ia < ib``, every pair once. Over all rows
+    × bands this is exactly the distinct pairs sharing ≥ 1 kept bucket."""
+    import numpy as np
+
+    flat, boff, blen, bucket_of, rank_of = index
+    ord_ = bucket_of[ii, band]
+    ok = ord_ >= 0
+    ii, band, ord_ = ii[ok], band[ok], ord_[ok]
+    start = boff[ord_] + rank_of[ii, band] + 1
+    counts = boff[ord_] + blen[ord_] - start
+    total = int(counts.sum())
+    cum = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=cum[1:])
+    k = (
+        np.arange(total, dtype=np.int64)
+        - np.repeat(cum[:-1], counts)
+        + np.repeat(start, counts)
+    )
+    ia = np.repeat(ii, counts)
+    ib = flat[k]
+    # same bucket ordinal ⇔ same hash in that band and the bucket kept
+    oa = bucket_of[ia]
+    shared = (oa == bucket_of[ib]) & (oa >= 0)
+    keep = shared.argmax(axis=1) == np.repeat(band, counts)
+    return ia[keep], ib[keep]

@@ -29,7 +29,6 @@ from anno_spark.plans.sizing import (
     checkpoint_count,
     first_shared_band16,
     fits_broadcast,
-    in_dropped_buckets,
     probe_spread,
 )
 
@@ -105,118 +104,40 @@ def doc_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _pair_gen_score_udf(bc, sig_len: int, threshold: float):
-    """Fused pair GENERATION + emit-once + est-Jaccard scoring for the
-    small path (r06b): input is the compact surviving ``(doc_id, band)``
-    table (~n_docs·bands rows), and each row expands to its bucket pairs
-    ``(doc_a, doc_b): doc_b > doc_a in the same bucket`` inside numpy —
-    the JVM band self-join and its ~12M-row Arrow export disappear
-    (were 39 executor-CPU-s and the single biggest remaining chunk of
-    the query). The generated multiset equals the join's raw stream
-    (one row per shared surviving band, a < b), and the emit-once +
-    threshold logic is identical to the superseded per-raw-row scorer
-    (bit-exact: integer compares and a divide by a power of two), so
-    the output set is unchanged.
-
-    ``bc`` carries, per doc (index-aligned with ``sorted_ids``):
-    signature/band-hash matrices, the valid mask, and the driver-built
-    bucket index — ``flat`` (bucket-member doc indices, ascending,
-    concatenated), ``boff``/``blen`` (per-bucket slices into flat),
-    ``bucket_of``/``rank_of`` (each doc's bucket ordinal and position
-    per band; -1 for dropped buckets)."""
+def _pair_gen_score_udf(bc, sig_len: int, threshold: float | None):
+    """Fused pair generation + emit-once + est-Jaccard scoring for the
+    small path: each input ``(doc_id, band)`` row expands to its bucket
+    partners through :func:`anno_spark.core.minhash.bucket_pairs` (each
+    distinct pair once, from its first shared kept band) against the
+    broadcast ``(sorted_ids, sig_matrix, bucket_index)``, so no JVM band
+    self-join or pairs-proportional Arrow export exists. ``threshold``
+    None keeps every pair."""
     import numpy as np
 
+    from anno_spark.core.minhash import bucket_pairs
+
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, sig, bh, valid, flat, boff, blen, bucket_of, rank_of = bc.value
+        ids, sig, index = bc.value
         for pdf in batches:
-            if not len(pdf):
-                continue
             ii = np.searchsorted(ids, pdf["doc_id"].to_numpy())
-            band = pdf["band"].to_numpy()
-            ord_ = bucket_of[ii, band]
-            ok = ord_ >= 0
-            ii, band, ord_ = ii[ok], band[ok], ord_[ok]
-            start = boff[ord_] + rank_of[ii, band] + 1
-            end = boff[ord_] + blen[ord_]
-            counts = end - start
-            total = int(counts.sum())
-            if total == 0:
+            ia, ib = bucket_pairs(index, ii, pdf["band"].to_numpy())
+            if not len(ia):
                 continue
-            cum = np.zeros(len(counts) + 1, dtype=np.int64)
-            np.cumsum(counts, out=cum[1:])
-            k = (
-                np.arange(total, dtype=np.int64)
-                - np.repeat(cum[:-1], counts)
-                + np.repeat(start, counts)
-            )
-            ia = np.repeat(ii, counts)
-            ib = flat[k]
-            bandr = np.repeat(band, counts)
-            eq = (bh[ia] == bh[ib]) & valid[ia] & valid[ib]
-            keep = eq.argmax(axis=1) == bandr
-            ia, ib = ia[keep], ib[keep]
-            agree = (sig[ia] == sig[ib]).sum(axis=1)
-            est = agree / float(sig_len)
-            good = est >= threshold
+            est = (sig[ia] == sig[ib]).sum(axis=1) / float(sig_len)
+            if threshold is not None:
+                good = est >= threshold
+                ia, ib, est = ia[good], ib[good], est[good]
             yield pd.DataFrame(
-                {
-                    "doc_a": ids[ia[good]],
-                    "doc_b": ids[ib[good]],
-                    "est_jaccard": est[good],
-                }
+                {"doc_a": ids[ia], "doc_b": ids[ib], "est_jaccard": est}
             )
 
     return gen
 
 
-def _build_bucket_index(bh, valid):
-    """Driver-side bucket index over the band-hash matrix: for each band,
-    group the VALID doc indices by hash value. Members are ascending by
-    doc index (stable sort), so ``rank_of`` + 1 slices each doc's
-    strictly-greater bucket partners directly."""
-    import numpy as np
-
-    n, n_bands = bh.shape
-    flats, boffs, blens = [], [], []
-    bucket_of = np.full((n, n_bands), -1, dtype=np.int64)
-    rank_of = np.zeros((n, n_bands), dtype=np.int64)
-    off = 0
-    n_buckets = 0
-    for b in range(n_bands):
-        vi = np.flatnonzero(valid[:, b])
-        order = vi[np.argsort(bh[vi, b], kind="stable")]
-        if not len(order):
-            continue
-        hashes = bh[order, b]
-        is_start = np.concatenate(([True], hashes[1:] != hashes[:-1]))
-        run_id = np.cumsum(is_start) - 1
-        run_start = np.flatnonzero(is_start)
-        flats.append(order)
-        boffs.append(off + run_start)
-        blens.append(
-            np.diff(np.concatenate((run_start, [len(order)])))
-        )
-        bucket_of[order, b] = n_buckets + run_id
-        rank_of[order, b] = np.arange(len(order)) - run_start[run_id]
-        n_buckets += len(run_start)
-        off += len(order)
-    if flats:
-        flat = np.concatenate(flats).astype(np.int64)
-        boff = np.concatenate(boffs).astype(np.int64)
-        blen = np.concatenate(blens).astype(np.int64)
-    else:
-        flat = np.zeros(0, dtype=np.int64)
-        boff = np.zeros(0, dtype=np.int64)
-        blen = np.zeros(0, dtype=np.int64)
-    return flat, boff, blen, bucket_of, rank_of
-
-
-def _collect_sig_matrices(
-    sigs: DataFrame, n_bands: int, dropped_buckets: list | None
-):
-    """(sorted_ids, sig_matrix, band_hash_matrix, valid_mask) as numpy
-    arrays, collected once from the (checkpointed) signature table for
-    the vectorized small-path scorer."""
+def _collect_sig_matrices(sigs: DataFrame, n_bands: int):
+    """(sorted_ids, sig_matrix, band_hash_matrix) as numpy arrays,
+    collected once from the (checkpointed) signature table for the
+    vectorized small-path scorer."""
     import numpy as np
 
     pdf = sigs.select("doc_id", "signature", "band_hashes").toPandas()
@@ -225,11 +146,7 @@ def _collect_sig_matrices(
     sig = np.array(pdf["signature"].tolist(), dtype=np.int64)[order]
     # (n_docs, n_bands) even on 0 docs, where np.array([]) would be 1-D
     bh = np.array(pdf["band_hashes"].tolist(), dtype=np.int64)
-    bh = bh.reshape(len(ids), n_bands)[order]
-    valid = np.ones(bh.shape, dtype=bool)
-    for b, h in dropped_buckets or ():
-        valid[:, b] &= bh[:, b] != h
-    return ids, sig, bh, valid
+    return ids, sig, bh.reshape(len(ids), n_bands)[order]
 
 
 def minhash_candidate_pairs(
@@ -237,77 +154,45 @@ def minhash_candidate_pairs(
     max_bucket_size: int | None = 1000,
     min_est_jaccard: float | None = None,
 ) -> DataFrame:
-    """LSH band join → candidate (doc_a, doc_b) pairs with estimated
-    Jaccard = fraction of agreeing signature rows (JVM zip_with).
+    """LSH buckets → candidate (doc_a, doc_b) pairs with estimated
+    Jaccard = fraction of agreeing signature rows; buckets with more than
+    ``max_bucket_size`` members are dropped for candidate generation;
+    ``min_est_jaccard`` None keeps every candidate.
 
-    The self-join shuffles ONLY (band, band_hash, doc_id) — a candidate
-    pair appears once per shared band, so dragging the 32-element
-    signature arrays through the pre-dedup blowup multiplies shuffle
-    bytes ~50×. On the web-scale path signatures are re-attached after
-    `dropDuplicates` via two joins against the compact signature table;
-    the small path dedups map-side instead (emit-once, below).
+    Small path — the docs fit a broadcast, gated on ESTIMATED BYTES
+    (rows × the band/signature geometry, ADVICE r02: a wide config can
+    blow the broadcast under any fixed doc-count gate): the signature
+    and band-hash matrices are collected once, the driver builds the
+    capped bucket index (:func:`anno_spark.core.minhash.bucket_index`)
+    and broadcasts it, and one fused python stage over the round-robin-
+    spread ``(doc_id, band)`` rows expands, dedups (emit-once) and scores
+    the pairs. No band self-join runs, and hot buckets parallelize
+    across all slots instead of landing in one join task.
 
-    Join strategy (same rationale as resolve.candidate_pairs): the band
-    table is tiny relative to its join OUTPUT (dup cliques explode
-    n²/2 pairs per bucket), and in a shuffled equi-join one hot
-    (band, band_hash) key lands in ONE task — AQE can split skewed
-    partitions but not a single key. When the docs fit a broadcast —
-    gated on ESTIMATED BYTES (rows × the band/signature geometry,
-    ADVICE r02: a wide config can blow the broadcast under any fixed
-    doc-count gate) — the build side is broadcast and the probe side
-    round-robin-spread, so the explosion parallelizes across all slots
-    (measured 6× on a near-dup-heavy 5k corpus). Beyond that, true web
-    scale: shuffled join + the bucket cap bounds per-key work.
+    Web scale: a shuffled self-join on (band, band_hash) that carries ONLY
+    ids and hashes through the pre-dedup blowup (dragging the 32-element
+    signatures along multiplies shuffle bytes ~50×), the bucket cap as a
+    join against the bucket sizes, ``dropDuplicates`` on the compact
+    pairs, then the signatures re-attached to the distinct pairs.
     """
     # one job: lazy checkpoint + exact count (VERDICT r02 wrong #4)
     sigs, n_docs = checkpoint_count(sigs)
-    # small path broadcasts the exploded band table (~24 B/row) and both
-    # signature+band-hash tables (8 B/element, twice)
     n_bands = DOC_NUM_BANDS
     sig_len = DOC_NUM_BANDS * DOC_ROWS_PER_BAND
+    # per-doc estimate of the small path's driver + broadcast payload
+    # (ids, signature matrix, bucket index ≈ 580 B/doc) with headroom
     small = fits_broadcast(n_docs, n_bands * 24 + 2 * (sig_len + n_bands) * 8 + 48)
-    maybe_broadcast = F.broadcast if small else (lambda df: df)
     bands = sigs.select(
         "doc_id", F.posexplode("band_hashes").alias("band", "band_hash")
     )
-    dropped_buckets: list | None = None
-    if max_bucket_size is not None:
-        sizes = bands.groupBy("band", "band_hash").agg(F.count("*").alias("n"))
-        if small:
-            # The DROPPED bucket set is tiny by construction (each holds
-            # > max_bucket_size members, so there are at most
-            # n_docs·n_bands/cap of them — ~2.4k at the ~305k docs the
-            # broadcast budget admits). As a driver-side literal it
-            # makes bucket survival decidable MAP-SIDE, which (a)
-            # replaces the sizes broadcast join with a codegen'd filter
-            # and (b) enables the emit-once dedup below. One tiny
-            # collect job replaces the sizes broadcast exchange job.
-            dropped_buckets = [
-                (int(r["band"]), int(r["band_hash"]))
-                for r in sizes.where(F.col("n") > max_bucket_size).collect()
-            ]
-            if dropped_buckets:
-                bands = bands.where(~in_dropped_buckets(dropped_buckets, F.col("band"), F.col("band_hash")))
-        else:
-            bands = bands.join(
-                sizes.where(F.col("n") <= max_bucket_size),
-                ["band", "band_hash"],
-            ).drop("n")
-    par = sigs.sparkSession.sparkContext.defaultParallelism
-    if small and min_est_jaccard is not None:
-        # Fused pair-generation + emit-once + threshold, all in one
-        # vectorized python stage (r06): the band self-join and its
-        # pairs-proportional Arrow export are gone — each surviving
-        # (doc_id, band) row expands to its bucket partners inside the
-        # kernel, against matrices broadcast once (bounded by the same
-        # fits_broadcast gate that admitted this path). Output set
-        # identical to the join + dropDuplicates plan (differential:
-        # tests/test_plans.py minhash emit-once; brute-force:
-        # tests/test_emit_once_differentials.py).
-        sc = sigs.sparkSession.sparkContext
-        mats = _collect_sig_matrices(sigs, n_bands, dropped_buckets)
-        bidx = _build_bucket_index(mats[2], mats[3])
-        bc = sc.broadcast((*mats, *bidx))
+    if small:
+        from anno_spark.core.minhash import bucket_index
+
+        ids, sig, bh = _collect_sig_matrices(sigs, n_bands)
+        bc = sigs.sparkSession.sparkContext.broadcast(
+            (ids, sig, bucket_index(bh, max_bucket_size))
+        )
+        par = sigs.sparkSession.sparkContext.defaultParallelism
         src = bands.select("doc_id", "band").repartition(
             probe_spread(par, n_docs * n_bands)
         )
@@ -315,11 +200,14 @@ def minhash_candidate_pairs(
             _pair_gen_score_udf(bc, sig_len, min_est_jaccard),
             schema="doc_a bigint, doc_b bigint, est_jaccard double",
         )
+    if max_bucket_size is not None:
+        sizes = bands.groupBy("band", "band_hash").agg(F.count("*").alias("n"))
+        bands = bands.join(
+            sizes.where(F.col("n") <= max_bucket_size), ["band", "band_hash"]
+        ).drop("n")
     left = bands.select("band", "band_hash", F.col("doc_id").alias("doc_a"))
-    if small:
-        left = left.repartition(probe_spread(par, n_docs * n_bands))
     right = bands.select("band", "band_hash", F.col("doc_id").alias("doc_b"))
-    raw = left.join(maybe_broadcast(right), ["band", "band_hash"]).where(
+    raw = left.join(right, ["band", "band_hash"]).where(
         F.col("doc_a") < F.col("doc_b")
     )
     sig_only = sigs.select("doc_id", "signature")
@@ -332,13 +220,13 @@ def minhash_candidate_pairs(
         )
     )
     est = (agree.cast("double") / F.size("sig_a").cast("double")).alias("est_jaccard")
-    # web-scale path: dedup the compact (id, id) pairs first, then attach
-    # signatures to the distinct pairs only
+    # dedup the compact (id, id) pairs first, then attach signatures to
+    # the distinct pairs only
     pairs = (
         raw.select("doc_a", "doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
-        .join(maybe_broadcast(sig_a), "doc_a")
-        .join(maybe_broadcast(sig_b), "doc_b")
+        .join(sig_a, "doc_a")
+        .join(sig_b, "doc_b")
     )
     out = pairs.select("doc_a", "doc_b", est)
     if min_est_jaccard is not None:

@@ -340,27 +340,3 @@ def metrics_from_stats(stats: DataFrame) -> DataFrame:
         F.sum("n_tracks").alias("tracks"),
         F.sum("truncated").alias("truncated_pages"),
     )
-
-
-def extraction_metrics(extracted: DataFrame, n_shards: int = 32) -> DataFrame:
-    """Content-deterministic lineage metrics (SURVEY §4 explicit-engineering
-    #5): page/mention/triple counts per url-hash shard. For physical
-    per-partition lineage at write time see
-    :func:`partition_lineage_metrics`."""
-    return metrics_from_stats(sharded_page_stats(extracted, n_shards))
-
-
-def partition_lineage_metrics(extracted: DataFrame) -> DataFrame:
-    """Physical per-partition lineage (one row per executor partition) —
-    written alongside snapshot checkpoints; run-specific by nature."""
-    return (
-        extracted.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("pages"),
-            F.sum(F.size("mentions")).alias("mentions"),
-            F.sum(F.size("triples")).alias("triples"),
-            F.sum(F.size("tracks")).alias("tracks"),
-            F.sum(F.col("truncated").cast("int")).alias("truncated_pages"),
-        )
-    )

@@ -21,13 +21,17 @@ shuffles only where marked:
                           exact FNV-1a parity with cdcr.rs:350-402), then
                           THE gate: one counting checkpoint of the band
                           table. ≤ DRIVER_RESOLVE_MAX_KEYS keys and ≤
-                          DRIVER_RESOLVE_MAX_PAIRS estimated pair visits
-                          (Σ C(|bucket|, 2)) run 3-6 on the driver
-                          (Python scoring, ``uf_labels``); else:
-3. ``candidate_pairs``  — self-equi-join on (band, band_hash)
-                          [shuffle: the LSH join; AQE skew-split on;
-                          optional max_bucket_size cap for stop-surface
-                          buckets — the explicit salting/skew lever]
+                          DRIVER_RESOLVE_MAX_PAIRS pair visits (Σ C(|bucket|,
+                          2) over kept buckets) run 3-6 on the driver: the
+                          one in-process pair kernel
+                          (``core.minhash.bucket_index``/``bucket_pairs``,
+                          shared with the document near-dup blocker), Python
+                          scoring of the distinct pairs, ``uf_labels``;
+                          else:
+3. ``candidate_pairs``  — self-equi-join on (band, band_hash) →
+                          dropDuplicates [shuffle: the LSH join; AQE
+                          skew-split on; optional max_bucket_size cap for
+                          stop-surface buckets — the explicit skew lever]
 4. ``score_pairs``      — string_similarity ≥ τ + type gate, entirely in
                           JVM expressions (no Python in the pair hot path)
 5. ``connected_components`` — iterative min-label propagation with
@@ -48,12 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from anno_spark.plans.iterloop import iter_checkpoint
-from anno_spark.plans.sizing import (
-    checkpoint_count,
-    fits_broadcast,
-    in_dropped_buckets,
-    probe_spread,
-)
+from anno_spark.plans.sizing import checkpoint_count, fits_broadcast, probe_spread
 
 MIN_SIMILARITY = 0.5  # cdcr.rs:433-442 default
 
@@ -129,11 +128,10 @@ def band_signatures(keys: DataFrame) -> DataFrame:
     """keys → (key_id, band_hashes array<bigint>), the unexploded LSH
     band-hash vector per key (5 bands × 3 rows, cdcr.rs:288-296).
 
-    The array form exists for the small path's emit-once pair dedup
-    (see :func:`candidate_pairs`): with both keys' vectors attached from
-    a broadcast, "is this raw join row the pair's first shared surviving
-    band?" is a map-side expression, and no pairs-proportional shuffle
-    is ever needed."""
+    :func:`resolve_keys` caches this form once: exploded it feeds the
+    distributed band join, collected it is the band-hash matrix of the
+    driver branch's bucket index (:func:`anno_spark.core.minhash.
+    bucket_index`)."""
     return keys.select("key_id", "surface", "entity_type").mapInPandas(
         _band_hash_batches,
         schema="key_id bigint, surface string, entity_type string, band_hashes array<bigint>",
@@ -159,18 +157,18 @@ def candidate_pairs(
     keys: DataFrame,
     max_bucket_size: int | None = None,
     _pre_dedup: bool = False,
-    band_sigs: DataFrame | None = None,
     _n_band_rows: int | None = None,
 ) -> DataFrame:
-    """Self-join on (band, band_hash) → distinct key pairs (a < b), with
+    """The distributed branch's pair generation: self-join on (band,
+    band_hash) → ``dropDuplicates`` → distinct key pairs (a < b), with
     surfaces/types re-attached AFTER dedup (the pre-dedup blowup carries
     only ids and hashes through the shuffle).
 
     Join strategy: checkpointed inputs hide size stats from Catalyst, so
     when the distinct keys fit the broadcast byte budget
-    (:func:`fits_broadcast`) the right side and the attribute
-    dimension get explicit broadcast hints — measured 6× over the
-    sort-merge plan at 2·10⁴ keys / 10⁸ joined rows. Beyond the
+    (:func:`fits_broadcast`) the right side, the bucket sizes and the
+    attribute dimension get explicit broadcast hints — measured 6× over
+    the sort-merge plan at 2·10⁴ keys / 10⁸ joined rows. Beyond the
     threshold (true web scale, ~10⁸ surfaces) it falls back to the
     shuffled join and AQE's skew splitting.
 
@@ -178,31 +176,16 @@ def candidate_pairs(
     stop-surface problem, SURVEY §7.5): buckets larger than the cap are
     dropped *for candidate generation only* — at web scale a bucket with
     10⁵ distinct surfaces contributes 10¹⁰ pairs and is always a
-    stop-surface artifact. None = exact reference parity.
-
-    ``band_sigs`` — the (key_id, band_hashes) table ``bands`` was
-    exploded from (:func:`band_signatures`). When provided on the small
-    path, pair dedup runs MAP-SIDE (emit-once: a pair is kept only in
-    the row whose band is its first shared *surviving* band, dropped
-    buckets masked to NULL in the broadcast-attached vectors), removing
-    the last pairs-proportional shuffle (the dropDuplicates exchange
-    carried ~bands× the distinct-pair count). Identical output set.
-
-    Emit-once additionally requires ``max_bucket_size``: it attaches
-    both keys' attribute+signature broadcasts to EVERY pre-dedup row,
-    so its per-row work must ride a raw stream the bucket cap bounds
-    (≤ kept_buckets·cap²/2 rows). Uncapped, one hot stop-surface bucket
-    makes raw quadratic and the compact id-only dropDuplicates shuffle
-    is strictly cheaper — measured 2.1× (139 s vs 286 s resolve stage,
-    400k synthetic pages, local[16], cap=None) while at cap=256 the two
-    are at parity with emit-once one exchange ahead.
+    stop-surface artifact. None = exact reference parity. The
+    in-process twin of this plan is :func:`anno_spark.core.minhash.
+    bucket_pairs`, which the driver branch of :func:`resolve_keys` uses.
     """
     # ONE job: lazy checkpoint + exact count (bands is consumed twice by
     # the self-join; the count also feeds the broadcast gate, replacing
     # the separate keys.limit().count() job — VERDICT r02 wrong #4).
     # band_table emits exactly CDCR_NUM_BANDS rows per key, so the key
     # count is derived, and the gate is byte-based (ADVICE r02).
-    # ``_n_band_rows`` lets resolve_mentions pass an already-counted,
+    # ``_n_band_rows`` lets resolve_keys pass an already-counted,
     # already-checkpointed band table without a second count job.
     if _n_band_rows is not None:
         n_band_rows = _n_band_rows
@@ -211,36 +194,14 @@ def candidate_pairs(
     n_keys = n_band_rows // CDCR_NUM_BANDS
     small = fits_broadcast(n_keys, CDCR_BYTES_PER_KEY_EST)
     maybe_broadcast = F.broadcast if small else (lambda df: df)
-    emit_once = (
-        small
-        and band_sigs is not None
-        and not _pre_dedup
-        and max_bucket_size is not None
-    )
-    dropped_buckets: list | None = None
     if max_bucket_size is not None:
         sizes = bands.groupBy("band", "band_hash").agg(
             F.count("*").alias("bucket_n")
         )
-        if emit_once:
-            # tiny by construction (every dropped bucket holds > cap
-            # members); as a driver literal, bucket survival becomes
-            # decidable map-side — see plans/sizing.in_dropped_buckets
-            dropped_buckets = [
-                (int(r["band"]), int(r["band_hash"]))
-                for r in sizes.where(F.col("bucket_n") > max_bucket_size).collect()
-            ]
-            if dropped_buckets:
-                bands = bands.where(
-                    ~in_dropped_buckets(
-                        dropped_buckets, F.col("band"), F.col("band_hash")
-                    )
-                )
-        else:
-            bands = bands.join(
-                maybe_broadcast(sizes.where(F.col("bucket_n") <= max_bucket_size)),
-                ["band", "band_hash"],
-            ).drop("bucket_n")
+        bands = bands.join(
+            maybe_broadcast(sizes.where(F.col("bucket_n") <= max_bucket_size)),
+            ["band", "band_hash"],
+        ).drop("bucket_n")
     # spread the probe side: AQE coalesces the small band table into a
     # handful of partitions, but the join EXPLODES output ~10²–10³× (hot
     # buckets), so the probe side must be pre-spread or the explosion
@@ -273,57 +234,6 @@ def candidate_pairs(
         "entity_type",
         _word_set(F.col("surface")).alias("words"),
     ).withColumn("n_words", F.size("words"))
-    if emit_once:
-        # map-side dedup: keep the row whose band is the pair's first
-        # shared SURVIVING band. The masked band-hash vectors ride the
-        # same per-side broadcast as the attrs (one join per side); the
-        # filter then drops the ~bands× band-duplicates before anything
-        # shuffles, so the whole path from explosion to scored pairs is
-        # exchange-free past the fixed-size probe spread.
-        masked = F.col("band_hashes")
-        if dropped_buckets:
-            masked = F.transform(
-                F.col("band_hashes"),
-                lambda h, i: F.when(
-                    ~in_dropped_buckets(dropped_buckets, i, h), h
-                ),
-            )
-        enriched = attrs.join(
-            band_sigs.select("key_id", masked.alias("mbh")), "key_id"
-        )
-        first_shared = F.array_position(
-            F.zip_with("mbh_a", "mbh_b", lambda a, b: a == b), F.lit(True)
-        )
-        return (
-            raw.join(
-                F.broadcast(
-                    enriched.select(
-                        F.col("key_id").alias("key_a"),
-                        F.col("surface").alias("surface_a"),
-                        F.col("entity_type").alias("type_a"),
-                        F.col("words").alias("words_a"),
-                        F.col("n_words").alias("nw_a"),
-                        F.col("mbh").alias("mbh_a"),
-                    )
-                ),
-                "key_a",
-            )
-            .join(
-                F.broadcast(
-                    enriched.select(
-                        F.col("key_id").alias("key_b"),
-                        F.col("surface").alias("surface_b"),
-                        F.col("entity_type").alias("type_b"),
-                        F.col("words").alias("words_b"),
-                        F.col("n_words").alias("nw_b"),
-                        F.col("mbh").alias("mbh_b"),
-                    )
-                ),
-                "key_b",
-            )
-            .where(F.col("band") + F.lit(1) == first_shared)
-            .drop("band", "band_hash", "mbh_a", "mbh_b")
-        )
     pairs = raw.select("key_a", "key_b").dropDuplicates(["key_a", "key_b"])
     return pairs.join(
         maybe_broadcast(
@@ -537,7 +447,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     if n_edges <= DRIVER_CC_MAX_EDGES and not force_fallback():
         return _driver_union_find(nodes, edges)
     # no dedup on the symmetrized table: every in-repo producer emits
-    # DISTINCT key_a < key_b pairs (emit-once band dedup / min-shared-
+    # DISTINCT key_a < key_b pairs (band-pair dedup / min-shared-
     # cell box dedup), so the union cannot collide and a dropDuplicates
     # here was one full edge-table exchange of pure waste before the
     # groupBy. Duplicate edges from an outside caller stay CORRECT —
@@ -710,41 +620,41 @@ class Resolution(NamedTuple):
 # branch runs.
 DRIVER_RESOLVE_MAX_KEYS = 20_000
 
-# Work gate for the same branch, on the band vectors it collected:
-# Σ C(|bucket|, 2) over kept buckets = pair visits of the Python loop,
-# which runs 0.7-2.6M visits/s (one Xeon core), so ≤ ~1.4 s — about the
-# distributed branch's fixed latency. A ~1.4k-key hot bucket exceeds it.
+# Work gate for the same branch, on the bucket index it built:
+# Σ C(|bucket|, 2) over kept buckets = pair visits of the emit-once
+# expansion, and an upper bound on the pairs the Python scorer sees
+# (0.7-2.6M/s on one Xeon core), so ≤ ~1.4 s — about the distributed
+# branch's fixed latency. A ~1.4k-key hot bucket exceeds it.
 DRIVER_RESOLVE_MAX_PAIRS = 1_000_000
 
 
-def _driver_scored_pairs(buckets, min_similarity, require_type_match):
-    """The driver branch's pair loop: kept buckets of (key_id, surface,
-    entity_type, word set) → [(key_a, key_b, similarity)], key_a < key_b,
-    each pair scored once by the :func:`_similarity` decision on the
-    STORED surfaces, ``split()`` ≡ the JVM ``_word_set`` (pinned by
+def _driver_scored_pairs(krows, ia, ib, min_similarity, require_type_match):
+    """The driver branch's scorer: distinct candidate pairs as row
+    indices into ``krows`` (sorted by key_id, ``ia < ib``) →
+    [(key_a, key_b, similarity)], key_a < key_b, scored by the
+    :func:`_similarity` decision on the STORED surfaces, ``split()`` ≡
+    the JVM ``_word_set`` (pinned by
     tests/test_spark_pipeline.py::test_string_similarity_expr_parity)."""
-    seen: set[tuple[int, int]] = set()
+    kid = [r["key_id"] for r in krows]
+    surf = [r["surface"] for r in krows]
+    typ = [r["entity_type"] for r in krows]
+    words = [frozenset(sf.split()) for sf in surf]
     edges = []
-    for members in buckets:
-        for i, (ka, sa, ta, wa) in enumerate(members):
-            for kb, sb, tb, wb in members[i + 1 :]:
-                pair = (ka, kb) if ka < kb else (kb, ka)
-                if pair in seen:
-                    continue
-                seen.add(pair)
-                if require_type_match and ta != tb:
-                    continue
-                if sa == sb:
-                    sim = 1.0
-                elif not sa or not sb:
-                    sim = 0.0
-                elif sb in sa or sa in sb:
-                    sim = 0.8
-                else:
-                    union = len(wa | wb)
-                    sim = len(wa & wb) / union if union else 0.0
-                if sim >= min_similarity:
-                    edges.append((*pair, sim))
+    for a, b in zip(ia.tolist(), ib.tolist()):
+        if require_type_match and typ[a] != typ[b]:
+            continue
+        sa, sb = surf[a], surf[b]
+        if sa == sb:
+            sim = 1.0
+        elif not sa or not sb:
+            sim = 0.0
+        elif sb in sa or sa in sb:
+            sim = 0.8
+        else:
+            union = len(words[a] | words[b])
+            sim = len(words[a] & words[b]) / union if union else 0.0
+        if sim >= min_similarity:
+            edges.append((kid[a], kid[b], sim))
     return edges
 
 
@@ -756,29 +666,37 @@ def _driver_resolve(
     require_type_match: bool,
 ) -> Resolution | None:
     """The driver branch: collect the (already materialized) key rows and
-    band-hash vectors, score the bucket pairs in-process, ``uf_labels``
-    for CC, identities from the same rows. Bucket-cap semantics as in
-    :func:`candidate_pairs` (buckets with > cap members dropped for
-    candidate generation). None when the pair visits exceed
+    band-hash vectors, build the capped bucket index and score the
+    distinct pairs :func:`anno_spark.core.minhash.bucket_pairs` emits,
+    ``uf_labels`` for CC, identities from the same rows. Bucket-cap
+    semantics as in :func:`candidate_pairs` (buckets with > cap members
+    dropped for candidate generation). None when the pair visits exceed
     ``DRIVER_RESOLVE_MAX_PAIRS``: the caller then runs the distributed
     branch."""
-    from anno_spark.core.document import KNOWN_KB_ENTITIES
+    import numpy as np
 
-    krows = keys.collect()  # full rows: the identities build below needs
-    # n_mentions/n_docs/first_seen alongside surface/entity_type
-    bh_by_key = {k: bh for k, bh in band_sigs.collect()}
-    buckets: dict[tuple[int, int], list] = {}
-    for r in krows:
-        member = (r["key_id"], r["surface"], r["entity_type"])
-        member += (frozenset(r["surface"].split()),)
-        for band, h in enumerate(bh_by_key[r["key_id"]]):
-            buckets.setdefault((band, h), []).append(member)
-    cap = len(krows) if max_bucket_size is None else max_bucket_size
-    kept = [m for m in buckets.values() if 1 < len(m) <= cap]
-    if sum(len(m) * (len(m) - 1) // 2 for m in kept) > DRIVER_RESOLVE_MAX_PAIRS:
+    from anno_spark.core.document import KNOWN_KB_ENTITIES
+    from anno_spark.core.minhash import bucket_index, bucket_pairs
+
+    # full rows: the identities build below needs n_mentions/n_docs/
+    # first_seen alongside surface/entity_type
+    krows = sorted(keys.collect(), key=lambda r: r["key_id"])
+    bh_by_key = dict(band_sigs.collect())
+    n = len(krows)
+    # (n, bands) even on 0 keys, where np.array([]) would be 1-D
+    bh = np.array(
+        [bh_by_key[r["key_id"]] for r in krows], dtype=np.int64
+    ).reshape(n, CDCR_NUM_BANDS)
+    index = bucket_index(bh, max_bucket_size)
+    if index.pair_visits() > DRIVER_RESOLVE_MAX_PAIRS:
         return None
+    ia, ib = bucket_pairs(
+        index,
+        np.repeat(np.arange(n), CDCR_NUM_BANDS),
+        np.tile(np.arange(CDCR_NUM_BANDS), n),
+    )
     edges = pd.DataFrame(
-        _driver_scored_pairs(kept, min_similarity, require_type_match),
+        _driver_scored_pairs(krows, ia, ib, min_similarity, require_type_match),
         columns=["key_a", "key_b", "similarity"],
     )
     uniq, labels = uf_labels(edges["key_a"], edges["key_b"])
@@ -845,9 +763,8 @@ def resolve_keys(
     parquet)."""
     from anno_spark.plans.sizing import force_fallback
 
-    # unexploded band vectors, cached: explode feeds the self-join, the
-    # array form feeds the driver branch and the small path's map-side
-    # emit-once pair dedup
+    # unexploded band vectors, cached: exploded they feed the
+    # distributed band join, collected the driver branch's bucket index
     band_sigs = band_signatures(keys).localCheckpoint(eager=False)
     # ONE job materializes keys+band_sigs+bands and yields the key count
     # for both the driver gate and candidate_pairs' broadcast gate
@@ -863,11 +780,7 @@ def resolve_keys(
         if res is not None:
             return res
     pairs = candidate_pairs(
-        bands,
-        keys,
-        max_bucket_size=max_bucket_size,
-        band_sigs=band_sigs,
-        _n_band_rows=n_band_rows,
+        bands, keys, max_bucket_size=max_bucket_size, _n_band_rows=n_band_rows
     )
     edges = score_pairs(pairs, min_similarity, require_type_match)
     edges = edges.localCheckpoint(eager=False)

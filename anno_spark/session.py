@@ -19,6 +19,26 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Default driver heap ceiling: single-JVM local mode makes the driver
+# heap the executor heap; nested-array checkpoints + wide shuffles at 32
+# threads GC-thrash an 8g heap (measured: keys stage 24s@8g → 6s@24g).
+MAX_DRIVER_MEM_GB = 32
+
+
+def default_driver_mem() -> str:
+    """min(32g, half of this host's ``MemTotal``, in whole GiB): a heap
+    larger than the host gets the JVM killed mid-run instead of slowing
+    it. ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as fh:
+            kib = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):  # no /proc/meminfo (non-Linux host)
+        return f"{MAX_DRIVER_MEM_GB}g"
+    return f"{max(1, min(MAX_DRIVER_MEM_GB, round(kib / 2**21)))}g"
+
 
 def get_spark(
     master: str | None = None,
@@ -57,10 +77,7 @@ def get_spark(
         # cap driver-UI noise in tests
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.ui.showConsoleProgress", "false")
-        # single-JVM local mode: the driver heap IS the executor heap;
-        # nested-array checkpoints + wide shuffles at 32 threads GC-thrash
-        # an 8g heap (measured: keys stage 24s@8g → 6s@24g)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", default_driver_mem())
     )
     if local_dir:
         b = b.config("spark.local.dir", local_dir)

@@ -1,24 +1,27 @@
 #!/usr/bin/env python
 """Jitter-immune companion to the frozen ``bench.py`` (VERDICT r05 next
-#1): per headline query, record executor task CPU TIME and SHUFFLE BYTES
-read/written alongside wall-clock. CPU time and shuffle bytes are
-plan+data functions — a noisy-neighbor host inflates wall 3-6× but
-cannot inflate either of them — so round-over-round comparisons made on
-``cpu_time_s`` survive the sandbox's documented scheduler decay.
+#1): per headline query, record executor task CPU TIME, SHUFFLE BYTES
+read/written and the Spark JOB COUNT alongside wall-clock. CPU time,
+shuffle bytes and jobs are plan+data functions — a noisy-neighbor host
+inflates wall 3-6× but cannot inflate any of them — so round-over-round
+comparisons made on ``cpu_time_s`` and ``jobs`` survive a noisy host's
+scheduler decay.
 
     python bench_extra.py [--isolate]          # noop-sink per-query isolation
 
 Methodology: the same queries, data dir ($SPARK_GRAFT_SF_DIR) and core
 count ($SPARK_GRAFT_CPUS) as bench.py; each query runs once warm inside
-its own job group; metrics come from the Spark event log (task-end
-records aggregated per job group). ``--isolate`` additionally times each
+its own job group; metrics come from the Spark event log (job-start and
+task-end records aggregated per job group; warm-up jobs are grouped
+separately and not reported). ``--isolate`` additionally times each
 query against the noop sink (guide §1.4) instead of ``.count()``, which
 forces every column of every row to be computed.
 
 Output: ONE JSON line
   {"metric": "headline_cpu_seconds_total", "value": N, "unit": "sec",
    "queries": {name: {"wall": s, "cpu_time_s": s, "shuffle_read_mb": m,
-                      "shuffle_write_mb": m, "tasks": n}}, ...}
+                      "shuffle_write_mb": m, "tasks": n, "jobs": n}},
+   "jobs_total": n, ...}
 """
 
 from __future__ import annotations
@@ -34,11 +37,18 @@ EVLOG_DIR = "/tmp/anno-spark-evlog"
 
 
 def _parse_event_log(path_glob: str) -> dict:
-    """group → {cpu_ns, shuffle_read_b, shuffle_write_b, tasks}."""
+    """group → {cpu_ns, shuffle_read_b, shuffle_write_b, tasks, jobs}."""
     import io
 
     stage_group: dict[int, str] = {}
     agg: dict[str, dict] = {}
+
+    def group_agg(group: str) -> dict:
+        return agg.setdefault(
+            group,
+            {"cpu_ns": 0, "shuffle_read_b": 0, "shuffle_write_b": 0, "tasks": 0, "jobs": 0},
+        )
+
     for fn in sorted(glob.glob(path_glob)):
         if os.path.isdir(fn):
             continue
@@ -67,15 +77,13 @@ def _parse_event_log(path_glob: str) -> dict:
             ev = e.get("Event")
             if ev == "SparkListenerJobStart":
                 group = e.get("Properties", {}).get("spark.jobGroup.id", "")
+                group_agg(group)["jobs"] += 1
                 for sid in e.get("Stage IDs", []):
                     stage_group[sid] = group
             elif ev == "SparkListenerTaskEnd":
                 group = stage_group.get(e.get("Stage ID"), "")
                 m = e.get("Task Metrics") or {}
-                a = agg.setdefault(
-                    group,
-                    {"cpu_ns": 0, "shuffle_read_b": 0, "shuffle_write_b": 0, "tasks": 0},
-                )
+                a = group_agg(group)
                 a["tasks"] += 1
                 a["cpu_ns"] += m.get("Executor CPU Time", 0)
                 srm = m.get("Shuffle Read Metrics") or {}
@@ -150,12 +158,14 @@ def main() -> None:
             "shuffle_read_mb": round(a.get("shuffle_read_b", 0) / 2**20, 3),
             "shuffle_write_mb": round(a.get("shuffle_write_b", 0) / 2**20, 3),
             "tasks": a.get("tasks", 0),
+            "jobs": a.get("jobs", 0),
         }
     out = {
         "metric": "headline_cpu_seconds_total",
         "value": round(total_cpu, 3),
         "unit": "sec",
         "wall_total": round(sum(v for v in walls.values()), 3),
+        "jobs_total": sum(q["jobs"] for q in queries.values()),
         "queries": queries,
         "sf": os.path.basename(sf_dir.rstrip("/")),
         "cpus": cpus,

@@ -13,10 +13,25 @@ import datetime
 import pytest
 
 
+# non-ASCII surfaces: accented, CJK and a supplementary-plane pair whose
+# first differing characters order one way by code point (U+FF58 <
+# U+1D538, as Spark's UTF-8 byte compare and Python's str compare do)
+# and the other way by UTF-16 unit (0xFF58 > 0xD835)
+NON_ASCII = [
+    "café de flore",
+    "cafe de flore",
+    "東京タワー",
+    "東京タワー 展望台",
+    "ｘ ｆｏｏ ｂａｒ ｃｏｒｐｏｒａｔｉｏｎ",
+    "𝔸 ｆｏｏ ｂａｒ ｃｏｒｐｏｒａｔｉｏｎ",
+]
+
+
 def _mentions(spark, ts=False):
     """``ts``: False (no warc_ts column), True (every mention stamped),
-    "all_null" (every stamp null), "mixed_null" (every third null) or
-    "empty" (no mentions; stamped schema)."""
+    "all_null" (every stamp null), "mixed_null" (every third null),
+    "empty" (no mentions; stamped schema) or "non_ascii" (stamped, plus
+    the :data:`NON_ASCII` surfaces)."""
     # near-identical distinct surfaces (shared 3-gram mass → hot common
     # LSH buckets), two hot families plus containment/jaccard pairs,
     # cross-type collisions, KB-hit surfaces, and canonical tie cases
@@ -32,6 +47,8 @@ def _mentions(spark, ts=False):
         ("https://ex.com/f", "Angela Merkel", "PER"),  # KB hit (Q567)
         ("https://ex.com/g", "Berlin", "LOC"),  # KB hit (Q64)
     ]
+    if ts == "non_ascii":
+        rows += [(f"https://ex.com/n{i}", t, "ORG") for i, t in enumerate(NON_ASCII)]
     if ts is False:
         return spark.createDataFrame(
             rows, "url string, text string, entity_type string"
@@ -74,7 +91,9 @@ def _resolved(rx, m, cap):
 
 
 @pytest.mark.parametrize("cap", [None, 16])
-@pytest.mark.parametrize("ts", [False, True, "all_null", "mixed_null", "empty"])
+@pytest.mark.parametrize(
+    "ts", [False, True, "all_null", "mixed_null", "empty", "non_ascii"]
+)
 def test_driver_resolve_matches_distributed(spark, monkeypatch, cap, ts):
     from anno_spark.operators import resolve as rx
 
@@ -99,6 +118,8 @@ def test_driver_resolve_matches_distributed(spark, monkeypatch, cap, ts):
     assert any(k[7] == "Q567" for k in fast_idents)
     if ts == "mixed_null":  # null singletons stay null, components skip nulls
         assert {k[9] is None for k in fast_idents} == {True, False}
+    if ts == "non_ascii":  # the code-point vs UTF-16 order case clustered
+        assert any(set(NON_ASCII[4:]) <= set(k[6]) for k in fast_idents)
 
 
 def test_hot_bucket_exceeds_pair_gate(spark, monkeypatch):

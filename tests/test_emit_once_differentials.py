@@ -1,10 +1,10 @@
-"""ADVICE r05 differentials for the emit-once pair-dedup paths that had
-only plan-level assertions:
+"""Differentials for the band-pair dedup paths:
 
-* resolve.candidate_pairs emit-once branch (bucket-cap-gated, NULL-masked
-  band vectors, dual enriched broadcast) vs the shuffled dropDuplicates
-  path — the exact mirror of
-  test_plans.py::test_minhash_emit_once_matches_dedup_with_dropped_buckets.
+* resolve.candidate_pairs' broadcast plan (band join → dropDuplicates
+  with explicit broadcast hints) vs its forced-fallback shuffled plan,
+  with a bucket cap that drops hot buckets and one that drops none. (The
+  in-process pair kernel both minhash blockers' small paths use is
+  pinned against a brute force in tests/test_minhash_kernel.py.)
 * simhash_near_duplicates / binary_hash_pairs first_shared_band16
   emit-once vs a BRUTE-FORCE all-pairs Hamming scan — at max_hamming ≤ 3
   the 4×16-bit banding is lossless (pigeonhole: ≤3 differing bits leave
@@ -18,8 +18,6 @@ from __future__ import annotations
 import re
 
 import numpy as np
-import pytest
-from pyspark.sql import functions as F
 
 # the shuffled branch's dropDuplicates(["key_a", "key_b"]) aggregate
 PAIR_DEDUP = re.compile(r"HashAggregate\(keys=\[key_a#\d+L?, key_b#\d+L?\]")
@@ -39,58 +37,43 @@ def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _shuffled_pairs(monkeypatch, bands, keys, cap):
-    """candidate_pairs on the shuffled dropDuplicates branch, selected
-    the way the forced-fallback sweep selects it; fails unless that
-    branch was planned."""
+def _pairs(rx, bands, keys, cap):
+    out = rx.candidate_pairs(bands, keys, max_bucket_size=cap)
+    rows = out.select("key_a", "key_b").collect()
+    pairs = {(r["key_a"], r["key_b"]) for r in rows}
+    assert len(rows) == len(pairs), "a pair was emitted more than once"
+    return pairs, _plan(out)
+
+
+def _broadcast_vs_forced(spark, monkeypatch, cap):
+    """candidate_pairs' pair set on the broadcast plan and on the
+    shuffled plan the forced-fallback sweep selects; both dedup with
+    the (key_a, key_b) aggregate, only the first broadcasts."""
     from anno_spark.operators import resolve as rx
 
+    keys = rx.surface_keys(_mentions(spark)).localCheckpoint()
+    bands = rx.band_table(keys).localCheckpoint()
+    small, plan = _pairs(rx, bands, keys, cap)
+    assert "BroadcastHashJoin" in plan and PAIR_DEDUP.search(plan), plan
     with monkeypatch.context() as m:
         m.setenv("SPARK_GRAFT_FORCE_FALLBACK", "1")
-        out = rx.candidate_pairs(bands, keys, max_bucket_size=cap)
-        assert PAIR_DEDUP.search(_plan(out)), _plan(out)
-        return {(r["key_a"], r["key_b"]) for r in out.select("key_a", "key_b").collect()}
+        forced, forced_plan = _pairs(rx, bands, keys, cap)
+    assert PAIR_DEDUP.search(forced_plan), forced_plan
+    return small, forced
 
 
 class TestResolveEmitOnceDifferential:
     def test_emit_once_matches_shuffled_dropduplicates_path(self, spark, monkeypatch):
-        from anno_spark.operators import resolve as rx
-
-        keys = rx.surface_keys(_mentions(spark)).localCheckpoint()
-        band_sigs = rx.band_signatures(keys).localCheckpoint()
-        bands = band_sigs.select(
-            "key_id", F.posexplode("band_hashes").alias("band", "band_hash")
-        )
-        cap = 16  # drops the 150/40-member buckets, keeps the ~11s
-        emit_once = rx.candidate_pairs(
-            bands, keys, max_bucket_size=cap, band_sigs=band_sigs
-        )
-        assert not PAIR_DEDUP.search(_plan(emit_once))
-        rows = emit_once.select("key_a", "key_b").collect()
-        pairs = {(r["key_a"], r["key_b"]) for r in rows}
-        assert len(rows) == len(pairs), "a pair was emitted from >1 band"
-        ref = _shuffled_pairs(monkeypatch, bands, keys, cap)
-        assert pairs == ref and len(pairs) > 0
+        # cap 16 drops the 150/40-member buckets and keeps the ~11s
+        small, forced = _broadcast_vs_forced(spark, monkeypatch, 16)
+        assert small == forced and len(small) > 0
 
     def test_emit_once_survives_dropped_first_band(self, spark, monkeypatch):
-        # also at a cap where SOME buckets drop but pairs survive via a
-        # later band, and without any cap-induced drops at all
-        from anno_spark.operators import resolve as rx
-
-        keys = rx.surface_keys(_mentions(spark)).localCheckpoint()
-        band_sigs = rx.band_signatures(keys).localCheckpoint()
-        bands = band_sigs.select(
-            "key_id", F.posexplode("band_hashes").alias("band", "band_hash")
-        )
+        # a pair whose first shared band fell in a dropped bucket must
+        # still come from a later kept one; cap 1000 drops nothing
         for cap in (16, 1000):
-            emit_once = {
-                (r["key_a"], r["key_b"])
-                for r in rx.candidate_pairs(
-                    bands, keys, max_bucket_size=cap, band_sigs=band_sigs
-                ).select("key_a", "key_b").collect()
-            }
-            ref = _shuffled_pairs(monkeypatch, bands, keys, cap)
-            assert emit_once == ref, f"cap={cap}"
+            small, forced = _broadcast_vs_forced(spark, monkeypatch, cap)
+            assert small == forced and len(small) > 0, f"cap={cap}"
 
 
 class TestLinkingDuplicateAliasInput:

@@ -1,0 +1,110 @@
+"""The in-process LSH pair kernel (core.minhash.bucket_index +
+bucket_pairs) against an all-pairs brute force: a pair is a candidate
+iff the two rows share at least one KEPT bucket (same hash in some band
+whose bucket holds ≤ cap rows), and the kernel emits each such pair
+exactly once."""
+
+from __future__ import annotations
+
+import itertools
+
+import numpy as np
+import pytest
+
+from anno_spark.core.minhash import bucket_index, bucket_pairs
+
+
+def _brute(bh, cap):
+    n, n_bands = bh.shape
+    out = set()
+    for a, b in itertools.combinations(range(n), 2):
+        for band in range(n_bands):
+            size = int((bh[:, band] == bh[a, band]).sum())
+            if bh[a, band] == bh[b, band] and (cap is None or size <= cap):
+                out.add((a, b))
+                break
+    return out
+
+
+def _kernel(bh, cap):
+    n, n_bands = bh.shape
+    index = bucket_index(bh, cap)
+    ia, ib = bucket_pairs(
+        index, np.repeat(np.arange(n), n_bands), np.tile(np.arange(n_bands), n)
+    )
+    got = list(zip(ia.tolist(), ib.tolist()))
+    assert len(got) == len(set(got)), "a pair was emitted more than once"
+    assert all(a < b for a, b in got)
+    return set(got), index
+
+
+def _seeded(seed, n, n_bands, n_values):
+    rng = np.random.default_rng(seed)
+    return rng.integers(0, n_values, size=(n, n_bands)).astype(np.int64)
+
+
+def _hot_bucket():
+    # rows 0-9 share band 0's hash (a 10-member bucket); rows 0/1 and
+    # 2/3 also pair through band 2
+    bh = np.arange(12 * 3, dtype=np.int64).reshape(12, 3) * 7
+    bh[:10, 0] = -5
+    bh[1, 2] = bh[0, 2]
+    bh[3, 2] = bh[2, 2]
+    return bh
+
+
+def _dropped_first_band():
+    # rows 0 and 1 share band 0 (inside a 6-member bucket) and band 3
+    # (a 2-member bucket): at cap 3 the pair survives from band 3 only
+    bh = np.arange(8 * 4, dtype=np.int64).reshape(8, 4)
+    bh[:6, 0] = 99
+    bh[1, 3] = bh[0, 3]
+    return bh
+
+
+CASES = {
+    "empty": (np.zeros((0, 5), dtype=np.int64), 3),
+    "singletons": (np.arange(40, dtype=np.int64).reshape(8, 5), 3),
+    "hot_bucket_over_cap": (_hot_bucket(), 4),
+    "dropped_first_band": (_dropped_first_band(), 3),
+    "uncapped": (_seeded(1, 60, 5, 6), None),
+    "random_capped": (_seeded(2, 60, 5, 6), 12),
+    "random_wide": (_seeded(3, 200, 8, 40), 7),
+}
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_bucket_pairs_match_brute_force(case):
+    bh, cap = CASES[case]
+    got, index = _kernel(bh, cap)
+    assert got == _brute(bh, cap)
+    # the pair gate counts every kept bucket's pairs, duplicates included
+    sizes = [
+        int((bh[:, band] == h).sum())
+        for band in range(bh.shape[1])
+        for h in np.unique(bh[:, band])
+    ]
+    kept = [s for s in sizes if cap is None or s <= cap]
+    assert index.pair_visits() == sum(s * (s - 1) // 2 for s in kept)
+    if case == "hot_bucket_over_cap":
+        assert got == {(0, 1), (2, 3)}
+        assert (index.bucket_of[:10, 0] == -1).all()
+    if case == "dropped_first_band":
+        assert (0, 1) in got and (0, 2) not in got
+    if case in ("empty", "singletons"):
+        assert got == set()
+
+
+def test_bucket_pairs_on_a_subset_of_rows():
+    # the fused dedup scorer expands any (row, band) batch: the union
+    # over disjoint batches is the full pair set, still each pair once
+    bh = _seeded(4, 80, 5, 5)
+    full, index = _kernel(bh, 20)
+    ii = np.repeat(np.arange(80), 5)
+    band = np.tile(np.arange(5), 80)
+    order = np.random.default_rng(0).permutation(len(ii))
+    got = []
+    for part in np.array_split(order, 7):
+        ia, ib = bucket_pairs(index, ii[part], band[part])
+        got += list(zip(ia.tolist(), ib.tolist()))
+    assert len(got) == len(set(got)) and set(got) == full

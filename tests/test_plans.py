@@ -205,9 +205,10 @@ class TestSkewProofBandJoins:
     def test_minhash_emit_once_matches_dedup_with_dropped_buckets(
         self, spark, sf_dir, monkeypatch
     ):
-        """The small path dedups band-duplicate pairs MAP-SIDE (emit once
-        from the pair's first shared SURVIVING band, dropped buckets
-        masked to NULL). With a tiny bucket cap forcing drops, a pair
+        """The small path dedups band-duplicate pairs inside the pair
+        kernel (emit once from the pair's first shared SURVIVING band;
+        the cap drops buckets inside the bucket index). With a tiny
+        bucket cap forcing drops, a pair
         whose first raw shared band was dropped must still be emitted —
         from its first surviving band — exactly once, matching the
         shuffled path's dropDuplicates semantics."""
