@@ -14,6 +14,11 @@ Behavioral re-implementation of the reference's LSH blocker
 Values are u64; :func:`to_i64` converts to two's-complement signed for
 storage in Spark ``bigint`` columns (equality-preserving).
 
+:func:`band_hash_matrix` is the batched form of ``compute_signature`` →
+``band_hashes`` → ``to_i64`` over many texts; both branches of the CDCR
+resolver hash their keys with it, and the per-text functions stay the
+reference it is tested against (and the document near-dup path's form).
+
 :func:`bucket_index` + :func:`bucket_pairs` are the one in-process way
 to turn a band-hash matrix into distinct candidate pairs (bucket cap
 applied, each pair emitted once); the CDCR driver branch and the
@@ -108,6 +113,58 @@ def band_hashes(sig: list[int], num_bands: int = NUM_BANDS, rows_per_band: int =
             acc = (acc * 31 + v) & _M64
         out.append(acc)
     return out
+
+
+def band_hash_matrix(surfaces):
+    """Band hashes of many texts at once → (n, NUM_BANDS) int64, row i
+    bit-identical to ``to_i64(band_hashes(compute_signature(surfaces[i])))``
+    (None reads as ""). The batched form of that reference: FNV-1a over
+    the DISTINCT grams of the whole batch, one vectorized step per byte
+    position, then ``np.minimum.reduceat`` per text and the wrapping
+    ``acc * 31 + v`` band fold, in uint64 (numpy arrays wrap like the
+    reference's ``& _M64``)."""
+    import numpy as np
+
+    total = NUM_BANDS * ROWS_PER_BAND
+    gram_id: dict[str, int] = {}
+    flat, starts = [], []
+    for s in surfaces:
+        starts.append(len(flat))
+        # every text has ≥ 1 gram ("" hashes the empty byte string), so
+        # no reduceat segment below is empty
+        flat.extend(
+            gram_id.setdefault(g, len(gram_id))
+            for g in set(extract_ngrams((s or "").lower()))
+        )
+    if not starts:
+        return np.zeros((0, NUM_BANDS), dtype=np.int64)
+    encoded = [g.encode("utf-8") for g in gram_id]
+    lens = np.fromiter(map(len, encoded), dtype=np.int64, count=len(encoded))
+    # zero byte appended so padded positions index inside the buffer
+    buf = np.frombuffer(b"".join(encoded) + b"\0", dtype=np.uint8)
+    width = int(lens.max())
+    pos = np.arange(width)
+    live = pos < lens[:, None]
+    offs = np.cumsum(lens) - lens
+    byte = np.where(live, buf[np.minimum(offs[:, None] + pos, len(buf) - 1)], 0)
+    byte = byte.astype(np.uint64)
+    # (signature row, gram) layout: each row's gather below is one
+    # contiguous (total grams,) copy, never a (total grams × 15) one,
+    # which would be ~70 MB for a 16k-key Arrow batch
+    h = np.repeat(
+        (np.arange(total, dtype=np.uint64) + np.uint64(_FNV_OFFSET))[:, None],
+        len(encoded),
+        axis=1,
+    )
+    prime = np.uint64(_FNV_PRIME)
+    for p in range(width):
+        h = np.where(live[:, p], (h ^ byte[:, p]) * prime, h)
+    flat = np.asarray(flat, dtype=np.int64)
+    sig = np.stack([np.minimum.reduceat(row[flat], starts) for row in h])
+    acc = np.zeros((NUM_BANDS, len(starts)), dtype=np.uint64)
+    for r in range(ROWS_PER_BAND):
+        acc = acc * np.uint64(31) + sig[r::ROWS_PER_BAND]
+    return np.ascontiguousarray(acc.T).view(np.int64)
 
 
 def signature_similarity(sig1: list[int], sig2: list[int]) -> float:

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import math
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -251,5 +252,5 @@ def demo_kb(spark: SparkSession) -> DataFrame:
         if len(parts) > 1:
             rows.append((parts[-1], qid, desc))  # surname / last-token alias
     return spark.createDataFrame(
-        rows, "alias string, kb_id string, description string"
+        pd.DataFrame(rows), "alias string, kb_id string, description string"
     ).dropDuplicates(["alias", "kb_id"])

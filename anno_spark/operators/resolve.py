@@ -17,26 +17,32 @@ shuffles only where marked:
 
 1. ``surface_keys``     — distinct (surface, entity_type) + mention counts
                           [shuffle: groupBy key; run by the caller]
-2. ``band_signatures``  — minhash/LSH band hashes per key (pandas UDF,
-                          exact FNV-1a parity with cdcr.rs:350-402), then
-                          THE gate: one counting checkpoint of the band
-                          table. ≤ DRIVER_RESOLVE_MAX_KEYS keys and ≤
-                          DRIVER_RESOLVE_MAX_PAIRS pair visits (Σ C(|bucket|,
-                          2) over kept buckets) run 3-6 on the driver: the
-                          one in-process pair kernel
+2. THE gate             — ``keys.count()``, one job that also materializes
+                          a lazily checkpointed ``keys``. ≤
+                          DRIVER_RESOLVE_MAX_KEYS keys: ONE collect of the
+                          key rows, their band hashes in-process
+                          (``core.minhash.band_hash_matrix``), and if the
+                          pair visits (Σ C(|bucket|, 2) over kept buckets)
+                          are ≤ DRIVER_RESOLVE_MAX_PAIRS, 4-7 run on the
+                          driver: the one in-process pair kernel
                           (``core.minhash.bucket_index``/``bucket_pairs``,
                           shared with the document near-dup blocker), Python
-                          scoring of the distinct pairs, ``uf_labels``;
-                          else:
-3. ``candidate_pairs``  — self-equi-join on (band, band_hash) →
+                          scoring of the distinct pairs, ``uf_labels``, and
+                          result frames built from pandas (Arrow
+                          ``LocalTableScan``); else:
+3. ``band_table``       — minhash/LSH band hashes per key (pandas UDF over
+                          the same kernel, exact FNV-1a parity with
+                          cdcr.rs:350-402), exploded to one row per band
+4. ``candidate_pairs``  — one counting checkpoint of the band table, then a
+                          self-equi-join on (band, band_hash) →
                           dropDuplicates [shuffle: the LSH join; AQE
                           skew-split on; optional max_bucket_size cap for
                           stop-surface buckets — the explicit skew lever]
-4. ``score_pairs``      — string_similarity ≥ τ + type gate, entirely in
+5. ``score_pairs``      — string_similarity ≥ τ + type gate, entirely in
                           JVM expressions (no Python in the pair hot path)
-5. ``connected_components`` — iterative min-label propagation with
+6. ``connected_components`` — iterative min-label propagation with
                           per-iteration localCheckpoint (SURVEY §4 #2)
-6. ``identities_table`` — per-component canonicalization + KB link
+7. ``identities_table`` — per-component canonicalization + KB link
                           [shuffle: groupBy component]
 
 Both branches return the same :class:`Resolution` (tests/test_driver_resolve.py).
@@ -107,35 +113,29 @@ def surface_keys(mentions: DataFrame) -> DataFrame:
 
 
 def _band_hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from anno_spark.core.minhash import band_hashes, compute_signature, to_i64
+    from anno_spark.core.minhash import band_hash_matrix
 
     for pdf in batches:
-        out_bands = [
-            [to_i64(b) for b in band_hashes(compute_signature(s or ""))]
-            for s in pdf["surface"]
-        ]
         yield pd.DataFrame(
             {
                 "key_id": pdf["key_id"],
-                "surface": pdf["surface"],
-                "entity_type": pdf["entity_type"],
-                "band_hashes": out_bands,
+                "band_hashes": list(band_hash_matrix(pdf["surface"])),
             }
         )
 
 
 def band_signatures(keys: DataFrame) -> DataFrame:
     """keys → (key_id, band_hashes array<bigint>), the unexploded LSH
-    band-hash vector per key (5 bands × 3 rows, cdcr.rs:288-296).
+    band-hash vector per key (5 bands × 3 rows, cdcr.rs:288-296), from
+    :func:`anno_spark.core.minhash.band_hash_matrix` in a pandas UDF.
 
-    :func:`resolve_keys` caches this form once: exploded it feeds the
-    distributed band join, collected it is the band-hash matrix of the
-    driver branch's bucket index (:func:`anno_spark.core.minhash.
-    bucket_index`)."""
-    return keys.select("key_id", "surface", "entity_type").mapInPandas(
-        _band_hash_batches,
-        schema="key_id bigint, surface string, entity_type string, band_hashes array<bigint>",
-    ).select("key_id", "band_hashes")
+    Distributed consumers only: :func:`band_table` explodes it for the
+    band join, and linking's emit-once join reads the vectors. The
+    driver branch of :func:`resolve_keys` hashes the key rows it already
+    collected with the same kernel and never runs this job."""
+    return keys.select("key_id", "surface").mapInPandas(
+        _band_hash_batches, schema="key_id bigint, band_hashes array<bigint>"
+    )
 
 
 def band_table(keys: DataFrame) -> DataFrame:
@@ -157,7 +157,6 @@ def candidate_pairs(
     keys: DataFrame,
     max_bucket_size: int | None = None,
     _pre_dedup: bool = False,
-    _n_band_rows: int | None = None,
 ) -> DataFrame:
     """The distributed branch's pair generation: self-join on (band,
     band_hash) → ``dropDuplicates`` → distinct key pairs (a < b), with
@@ -185,12 +184,7 @@ def candidate_pairs(
     # the separate keys.limit().count() job — VERDICT r02 wrong #4).
     # band_table emits exactly CDCR_NUM_BANDS rows per key, so the key
     # count is derived, and the gate is byte-based (ADVICE r02).
-    # ``_n_band_rows`` lets resolve_keys pass an already-counted,
-    # already-checkpointed band table without a second count job.
-    if _n_band_rows is not None:
-        n_band_rows = _n_band_rows
-    else:
-        bands, n_band_rows = checkpoint_count(bands)
+    bands, n_band_rows = checkpoint_count(bands)
     n_keys = n_band_rows // CDCR_NUM_BANDS
     small = fits_broadcast(n_keys, CDCR_BYTES_PER_KEY_EST)
     maybe_broadcast = F.broadcast if small else (lambda df: df)
@@ -393,14 +387,7 @@ def _driver_union_find(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     table), so the contract is documented rather than paid for with two
     extra semi-joins per invocation on a 10⁸-row edge table."""
     pdf = edges.select("key_a", "key_b").toPandas()
-    return _labeled_nodes(
-        nodes, *uf_labels(pdf["key_a"].to_numpy(), pdf["key_b"].to_numpy())
-    )
-
-
-def _labeled_nodes(nodes: DataFrame, uniq, labels) -> DataFrame:
-    """``uf_labels`` output → (key_id, component_id) over ``nodes`` with
-    one broadcast join; ids absent from the edge list keep their own."""
+    uniq, labels = uf_labels(pdf["key_a"].to_numpy(), pdf["key_b"].to_numpy())
     comp = nodes.sparkSession.createDataFrame(
         pd.DataFrame({"key_id": uniq, "component_id": labels}),
         schema="key_id bigint, component_id bigint",
@@ -555,8 +542,12 @@ def identities_table(
         *([F.min("first_seen").alias("first_seen")] if has_ts else []),
     )
     spark = keys.sparkSession
+    # a pandas frame plans as an Arrow LocalTableScan; a list of tuples
+    # would be a pickled Python RDD every consumer re-scans
     kb = spark.createDataFrame(
-        [(name, qid, desc) for name, (qid, desc) in KNOWN_KB_ENTITIES.items()],
+        pd.DataFrame(
+            [(name, qid, desc) for name, (qid, desc) in KNOWN_KB_ENTITIES.items()]
+        ),
         "canonical_lower string, kb_id string, kb_description string",
     )
     return (
@@ -612,12 +603,13 @@ class Resolution(NamedTuple):
     identities: DataFrame
 
 
-# Key-count gate for the driver branch of resolve_keys: band/pair/
-# score/CC work on a few thousand distinct surfaces costs milliseconds
-# in-process but ~7 Spark jobs of fixed scheduler+broadcast latency
-# distributed (measured 1.6 s of the sf1.0 bench on a 2.5k-key,
-# 1.3k-edge graph). Past the gate (true web scale) the distributed
-# branch runs.
+# Key-count gate for the driver branch of resolve_keys, read off one
+# count job: at or below it the key rows are collected once and hashed
+# in-process by band_hash_matrix (~17 µs/key on one core, so ≤ ~0.35 s
+# here), and band/pair/score/CC work costs milliseconds where the
+# distributed branch pays ~7 Spark jobs of fixed scheduler+broadcast
+# latency (measured 1.6 s of the sf1.0 bench on a 2.5k-key, 1.3k-edge
+# graph). Past the gate (true web scale) the distributed branch runs.
 DRIVER_RESOLVE_MAX_KEYS = 20_000
 
 # Work gate for the same branch, on the bucket index it built:
@@ -660,15 +652,18 @@ def _driver_scored_pairs(krows, ia, ib, min_similarity, require_type_match):
 
 def _driver_resolve(
     keys: DataFrame,
-    band_sigs: DataFrame,
     max_bucket_size: int | None,
     min_similarity: float,
     require_type_match: bool,
 ) -> Resolution | None:
-    """The driver branch: collect the (already materialized) key rows and
-    band-hash vectors, build the capped bucket index and score the
-    distinct pairs :func:`anno_spark.core.minhash.bucket_pairs` emits,
-    ``uf_labels`` for CC, identities from the same rows. Bucket-cap
+    """The driver branch, from ONE collect of the key rows: their band
+    hashes in-process (:func:`anno_spark.core.minhash.band_hash_matrix`,
+    the kernel :func:`band_signatures` runs distributed), the capped
+    bucket index, the distinct pairs :func:`anno_spark.core.minhash.
+    bucket_pairs` emits scored in Python, ``uf_labels`` for CC, and
+    components and identities from the same rows. Every returned frame
+    is built from pandas, so it plans as an Arrow ``LocalTableScan``: no
+    consumer runs a Spark job or a Python worker to read it. Bucket-cap
     semantics as in :func:`candidate_pairs` (buckets with > cap members
     dropped for candidate generation). None when the pair visits exceed
     ``DRIVER_RESOLVE_MAX_PAIRS``: the caller then runs the distributed
@@ -676,18 +671,24 @@ def _driver_resolve(
     import numpy as np
 
     from anno_spark.core.document import KNOWN_KB_ENTITIES
-    from anno_spark.core.minhash import bucket_index, bucket_pairs
+    from anno_spark.core.minhash import band_hash_matrix, bucket_index, bucket_pairs
 
-    # full rows: the identities build below needs n_mentions/n_docs/
-    # first_seen alongside surface/entity_type
-    krows = sorted(keys.collect(), key=lambda r: r["key_id"])
-    bh_by_key = dict(band_sigs.collect())
+    has_ts = "first_seen" in keys.columns
+    # first_seen travels as epoch microseconds: collect() would hand back
+    # naive datetimes in the Python process's zone, and Arrow reads naive
+    # values in the session zone, so the two zones would shift the stamp
+    stamp = [F.unix_micros("first_seen").alias("first_seen")] if has_ts else []
+    krows = sorted(
+        keys.select(
+            "key_id", "surface", "entity_type", "n_mentions", "n_docs", *stamp
+        ).collect(),
+        key=lambda r: r["key_id"],
+    )
     n = len(krows)
-    # (n, bands) even on 0 keys, where np.array([]) would be 1-D
-    bh = np.array(
-        [bh_by_key[r["key_id"]] for r in krows], dtype=np.int64
-    ).reshape(n, CDCR_NUM_BANDS)
-    index = bucket_index(bh, max_bucket_size)
+    kid = np.array([r["key_id"] for r in krows], dtype=np.int64)
+    index = bucket_index(
+        band_hash_matrix([r["surface"] for r in krows]), max_bucket_size
+    )
     if index.pair_visits() > DRIVER_RESOLVE_MAX_PAIRS:
         return None
     ia, ib = bucket_pairs(
@@ -700,53 +701,68 @@ def _driver_resolve(
         columns=["key_a", "key_b", "similarity"],
     )
     uniq, labels = uf_labels(edges["key_a"], edges["key_b"])
-    # identities built from the SAME collected rows: the distributed
-    # identities_table is one groupBy + a broadcast KB join over a table
-    # this branch has already collected. Exact replication of its
-    # semantics: canonical pick = max by (n_mentions, surface,
-    # entity_type) — Python tuple comparison ≡ Spark struct comparison
-    # (longs by value; strings by code point ≡ UTF-8 binary order);
-    # aliases = sorted distinct surfaces (same order property); KB
-    # lookup on the lowercased canonical (surfaces are already
-    # lowercase); first_seen = min over non-null values, like F.min,
-    # round-tripped as session-local datetimes.
-    comp_of = dict(zip(uniq.tolist(), labels.tolist()))
+    # kid is sorted and holds every edge endpoint; keys without an edge
+    # keep their own id
+    comp = kid.copy()
+    comp[np.searchsorted(kid, uniq)] = labels
+    # identities from the SAME rows, replicating identities_table:
+    # canonical pick = max by (n_mentions, surface, entity_type) — Python
+    # tuple comparison ≡ Spark struct comparison (longs by value; strings
+    # by code point ≡ UTF-8 binary order); aliases = sorted distinct
+    # surfaces (same order property); KB lookup on the lowercased
+    # canonical (surfaces are already lowercase); first_seen = min over
+    # non-null values, like F.min.
     groups: dict[int, list] = {}
-    for r in krows:
-        groups.setdefault(comp_of.get(r["key_id"], r["key_id"]), []).append(r)
-    has_ts = "first_seen" in keys.columns
-    ident_rows = []
+    for r, cid in zip(krows, comp.tolist()):
+        groups.setdefault(cid, []).append(r)
+    ident_rows, first_seen = [], []
     for cid, rows in groups.items():
         pick = max(
             rows, key=lambda r: (r["n_mentions"], r["surface"], r["entity_type"])
         )
-        kb = KNOWN_KB_ENTITIES.get(pick["surface"].lower())
-        stamps = [r["first_seen"] for r in rows if has_ts and r["first_seen"] is not None]
         ident_rows.append(
             (
-                int(cid),
+                cid,
                 pick["surface"],
                 pick["entity_type"],
-                int(sum(r["n_mentions"] for r in rows)),
-                int(sum(r["n_docs"] for r in rows)),
+                sum(r["n_mentions"] for r in rows),
+                sum(r["n_docs"] for r in rows),
                 len(rows),
                 sorted({r["surface"] for r in rows}),
             )
-            + ((min(stamps, default=None),) if has_ts else ())
-            + ((kb[0], kb[1]) if kb else (None, None))
+            + KNOWN_KB_ENTITIES.get(pick["surface"].lower(), (None, None))
         )
-    ident_schema = (
-        "identity_id bigint, canonical_name string, entity_type string, "
-        "n_mentions bigint, n_docs bigint, n_surfaces bigint, "
-        "aliases array<string>, "
-        + ("first_seen timestamp, " if has_ts else "")
-        + "kb_id string, kb_description string"
+        if has_ts:
+            stamps = [r["first_seen"] for r in rows if r["first_seen"] is not None]
+            first_seen.append(min(stamps, default=None))
+    idents = pd.DataFrame(
+        ident_rows,
+        columns=[
+            "identity_id", "canonical_name", "entity_type", "n_mentions",
+            "n_docs", "n_surfaces", "aliases", "kb_id", "kb_description",
+        ],
     )
+    if has_ts:  # UTC-aware: Arrow converts it to the same instant in any zone
+        idents.insert(
+            7,
+            "first_seen",
+            pd.to_datetime(pd.array(first_seen, dtype="Int64"), unit="us", utc=True),
+        )
     spark = keys.sparkSession
     return Resolution(
         spark.createDataFrame(edges, "key_a bigint, key_b bigint, similarity double"),
-        _labeled_nodes(keys, uniq, labels).localCheckpoint(eager=False),
-        spark.createDataFrame(ident_rows, schema=ident_schema),
+        spark.createDataFrame(
+            pd.DataFrame({"key_id": kid, "component_id": comp}),
+            "key_id bigint, component_id bigint",
+        ),
+        spark.createDataFrame(
+            idents,
+            "identity_id bigint, canonical_name string, entity_type string, "
+            "n_mentions bigint, n_docs bigint, n_surfaces bigint, "
+            "aliases array<string>, "
+            + ("first_seen timestamp, " if has_ts else "")
+            + "kb_id string, kb_description string",
+        ),
     )
 
 
@@ -760,28 +776,16 @@ def resolve_keys(
     the band → pairs → score → CC → identities chain is assembled; the
     gate and both branches are described in the module docstring.
     ``keys`` is read several times: pass it materialized (checkpoint or
-    parquet)."""
+    parquet), or lazily checkpointed — the gate's count job then
+    materializes it."""
     from anno_spark.plans.sizing import force_fallback
 
-    # unexploded band vectors, cached: exploded they feed the
-    # distributed band join, collected the driver branch's bucket index
-    band_sigs = band_signatures(keys).localCheckpoint(eager=False)
-    # ONE job materializes keys+band_sigs+bands and yields the key count
-    # for both the driver gate and candidate_pairs' broadcast gate
-    bands, n_band_rows = checkpoint_count(
-        band_sigs.select(
-            "key_id", F.posexplode("band_hashes").alias("band", "band_hash")
-        )
-    )
-    if n_band_rows // CDCR_NUM_BANDS <= DRIVER_RESOLVE_MAX_KEYS and not force_fallback():
-        res = _driver_resolve(
-            keys, band_sigs, max_bucket_size, min_similarity, require_type_match
-        )
+    if not force_fallback() and keys.count() <= DRIVER_RESOLVE_MAX_KEYS:
+        res = _driver_resolve(keys, max_bucket_size, min_similarity, require_type_match)
         if res is not None:
             return res
-    pairs = candidate_pairs(
-        bands, keys, max_bucket_size=max_bucket_size, _n_band_rows=n_band_rows
-    )
+    # candidate_pairs checkpoints and counts the band table in one job
+    pairs = candidate_pairs(band_table(keys), keys, max_bucket_size=max_bucket_size)
     edges = score_pairs(pairs, min_similarity, require_type_match)
     edges = edges.localCheckpoint(eager=False)
     # checkpointed: identities and the callers' joins all read the labels,

@@ -2,13 +2,16 @@
 under the DRIVER_RESOLVE_MAX_KEYS gate, resolve_mentions must produce
 byte-identical (key, component) labelings and identities whether the
 candidate→score→CC chain runs on the driver or distributed (gate forced
-off), with and without a bucket cap, with and without (null) timestamps
-and on empty input; and that a hot bucket under the key gate trips the
-pair-count gate instead of the Python pair loop."""
+off), with and without a bucket cap, with and without (null) timestamps,
+under a session time zone other than the process's, and on empty input;
+that the driver branch runs only its count and collect and returns local
+relations; and that a hot bucket under the key gate trips the pair-count
+gate instead of the Python pair loop."""
 
 from __future__ import annotations
 
 import datetime
+import zoneinfo
 
 import pytest
 
@@ -30,8 +33,9 @@ NON_ASCII = [
 def _mentions(spark, ts=False):
     """``ts``: False (no warc_ts column), True (every mention stamped),
     "all_null" (every stamp null), "mixed_null" (every third null),
-    "empty" (no mentions; stamped schema) or "non_ascii" (stamped, plus
-    the :data:`NON_ASCII` surfaces)."""
+    "empty" (no mentions; stamped schema), "non_ascii" (stamped, plus
+    the :data:`NON_ASCII` surfaces) or "session_tz" (stamped; the test
+    sets a session time zone, see :func:`_other_zone`)."""
     # near-identical distinct surfaces (shared 3-gram mass → hot common
     # LSH buckets), two hot families plus containment/jaccard pairs,
     # cross-type collisions, KB-hit surfaces, and canonical tie cases
@@ -66,6 +70,21 @@ def _mentions(spark, ts=False):
     )
 
 
+def _other_zone():
+    """A zone whose UTC offset differs from the Python process's own:
+    collect() returns naive datetimes in the process's zone while Arrow
+    reads naive values in ``spark.sql.session.timeZone``, so a driver
+    branch that handed collected stamps back unconverted would shift
+    ``first_seen`` by the difference."""
+    now = datetime.datetime.now(datetime.timezone.utc)
+    local = now.astimezone().utcoffset()
+    return next(
+        z
+        for z in ("America/Los_Angeles", "Asia/Tokyo")
+        if now.astimezone(zoneinfo.ZoneInfo(z)).utcoffset() != local
+    )
+
+
 def _ident_key(r):
     return (
         r["identity_id"],
@@ -92,11 +111,16 @@ def _resolved(rx, m, cap):
 
 @pytest.mark.parametrize("cap", [None, 16])
 @pytest.mark.parametrize(
-    "ts", [False, True, "all_null", "mixed_null", "empty", "non_ascii"]
+    "ts", [False, True, "all_null", "mixed_null", "empty", "non_ascii", "session_tz"]
 )
-def test_driver_resolve_matches_distributed(spark, monkeypatch, cap, ts):
+def test_driver_resolve_matches_distributed(spark, monkeypatch, request, cap, ts):
     from anno_spark.operators import resolve as rx
 
+    if ts == "session_tz":
+        conf = "spark.sql.session.timeZone"
+        saved = spark.conf.get(conf)
+        spark.conf.set(conf, _other_zone())
+        request.addfinalizer(lambda: spark.conf.set(conf, saved))
     m = _mentions(spark, ts=ts)
     fast, fast_idents, columns = _resolved(rx, m, cap)
     assert sorted(columns) == sorted(
@@ -120,6 +144,32 @@ def test_driver_resolve_matches_distributed(spark, monkeypatch, cap, ts):
         assert {k[9] is None for k in fast_idents} == {True, False}
     if ts == "non_ascii":  # the code-point vs UTF-16 order case clustered
         assert any(set(NON_ASCII[4:]) <= set(k[6]) for k in fast_idents)
+
+
+def test_driver_branch_runs_count_and_collect_into_local_relations(spark):
+    """On a materialized key table the driver branch runs only the gate's
+    count (AQE splits it into two jobs) and one collect of the key rows,
+    with no band-hash job or checkpoint; and every Resolution frame is a
+    local relation (Arrow ``LocalTableScan``), not a pickled Python RDD
+    (``Scan ExistingRDD``) that each consumer re-scans."""
+    from anno_spark.operators import resolve as rx
+
+    keys = rx.surface_keys(_mentions(spark, ts=True)).localCheckpoint()
+    sc = spark.sparkContext
+    group = "test-driver-resolve-jobs"
+    sc.setJobGroup(group, "resolve_keys, driver branch")
+    try:
+        res = rx.resolve_keys(keys)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job starts reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 3, sorted(jobs)
+    for name, df in res._asdict().items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, (name, plan)
+        assert "ExistingRDD" not in plan, (name, plan)
 
 
 def test_hot_bucket_exceeds_pair_gate(spark, monkeypatch):

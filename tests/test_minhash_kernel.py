@@ -2,16 +2,25 @@
 bucket_pairs) against an all-pairs brute force: a pair is a candidate
 iff the two rows share at least one KEPT bucket (same hash in some band
 whose bucket holds ≤ cap rows), and the kernel emits each such pair
-exactly once."""
+exactly once. Plus the batched band-hash kernel (band_hash_matrix)
+against the per-text reference signature."""
 
 from __future__ import annotations
 
 import itertools
+import random
 
 import numpy as np
 import pytest
 
-from anno_spark.core.minhash import bucket_index, bucket_pairs
+from anno_spark.core.minhash import (
+    band_hash_matrix,
+    band_hashes,
+    bucket_index,
+    bucket_pairs,
+    compute_signature,
+    to_i64,
+)
 
 
 def _brute(bh, cap):
@@ -108,3 +117,26 @@ def test_bucket_pairs_on_a_subset_of_rows():
         ia, ib = bucket_pairs(index, ii[part], band[part])
         got += list(zip(ia.tolist(), ib.tolist()))
     assert len(got) == len(set(got)) and set(got) == full
+
+
+def test_band_hash_matrix_matches_reference():
+    """Bit-identical to to_i64(band_hashes(compute_signature(s))) per
+    text: empty and 1-2 char texts (hashed whole), upper case (the
+    reference lowercases), None (read as ""), CJK, supplementary-plane
+    and full-width characters (multi-byte UTF-8 grams of different
+    widths in one batch), repeated grams, and a seeded random set with
+    duplicate texts."""
+    rng = random.Random(20)
+    alphabet = "ab cd éü東京タワー𝔸ｘ"
+    surfaces = [
+        "", "a", "ab", "abc", "AbC", None, "東", "東京", "𝔸", "𝔸ｘ", "ｘ𝔸東",
+        "aaaa", "aaaaaaa", "İstanbul", "acme corporation unit 5",
+    ] + ["".join(rng.choice(alphabet) for _ in range(rng.randint(0, 24))) for _ in range(3000)]
+    ref = np.array(
+        [[to_i64(b) for b in band_hashes(compute_signature(s or ""))] for s in surfaces],
+        dtype=np.int64,
+    )
+    got = band_hash_matrix(surfaces)
+    assert got.dtype == np.int64
+    np.testing.assert_array_equal(got, ref)
+    assert band_hash_matrix([]).shape == (0, ref.shape[1])
