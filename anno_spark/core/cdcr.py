@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from .minhash import band_hashes, compute_signature
+from .minhash import band_hash_matrix
 from .similarity import string_similarity
 
 
@@ -33,8 +33,7 @@ class MentionRef:
 
 def candidate_pairs_lsh(texts: list[str]) -> set[tuple[int, int]]:
     """cdcr.rs:314-347 — all index pairs sharing any LSH band bucket."""
-    sigs = [compute_signature(t) for t in texts]
-    bands = [band_hashes(s) for s in sigs]
+    bands = band_hash_matrix(texts).tolist()
     candidates: set[tuple[int, int]] = set()
     num_bands = len(bands[0]) if bands else 0
     for band in range(num_bands):

@@ -14,15 +14,17 @@ Behavioral re-implementation of the reference's LSH blocker
 Values are u64; :func:`to_i64` converts to two's-complement signed for
 storage in Spark ``bigint`` columns (equality-preserving).
 
-:func:`band_hash_matrix` is the batched form of ``compute_signature`` →
-``band_hashes`` → ``to_i64`` over many texts; both branches of the CDCR
-resolver hash their keys with it, and the per-text functions stay the
-reference it is tested against (and the document near-dup path's form).
+:func:`signature_matrix` is the one signature implementation: it hashes
+many texts at once (distinct grams once per pass, passes bounded in
+grams) for any bands × rows geometry. Document near-dup calls it with
+8 × 4, the CDCR resolver through :func:`band_hash_matrix` (5 × 3, band
+hashes only); :func:`compute_signature` is its row 0 for one text.
 
 :func:`bucket_index` + :func:`bucket_pairs` are the one in-process way
 to turn a band-hash matrix into distinct candidate pairs (bucket cap
-applied, each pair emitted once); the CDCR driver branch and the
-document near-dup small path both use them.
+applied, each pair emitted once); :func:`scored_pairs` adds the
+estimated-Jaccard score in bounded chunks. The CDCR driver branch and
+document near-dup's driver and broadcast-UDF tiers use them.
 """
 
 from __future__ import annotations
@@ -53,53 +55,15 @@ def extract_ngrams(text: str, n: int = NGRAM_SIZE) -> list[str]:
     return [text[i : i + n] for i in range(len(text) - n + 1)]
 
 
-# gram → hash-vector cache: n-grams repeat massively across documents, so
-# memoizing the per-gram FNV vector (as a numpy uint64 row) turns the
-# signature cost from O(len·rows) hashing into dict lookups plus one
-# vectorized column-min. Purely an evaluation cache — results are
-# bit-identical with or without it (verified by the unit suite).
-# Bounded LRU (ADVICE r01): long-lived python workers over a diverse
-# corpus would otherwise grow an unevictable multi-hundred-MB dict. 64k
-# entries (~20 MB) covers the surface-key use case (short repeated keys)
-# where the cache actually pays; doc-granularity grams mostly miss anyway.
-_GRAM_CACHE: dict = {}
-_GRAM_CACHE_MAX = 65_536
-
-
-def _gram_hashes(gram: str, total: int):
-    import numpy as np
-
-    key = (gram, total)
-    hit = _GRAM_CACHE.get(key)
-    if hit is None:
-        gb = gram.encode("utf-8")
-        hit = np.array([fnv1a_seeded(gb, h) for h in range(total)], dtype=np.uint64)
-        if len(_GRAM_CACHE) >= _GRAM_CACHE_MAX:
-            # evict oldest insertion (dicts preserve insertion order) —
-            # cheap FIFO approximation of LRU, O(1), no extra structure
-            _GRAM_CACHE.pop(next(iter(_GRAM_CACHE)))
-        _GRAM_CACHE[key] = hit
-    return hit
-
-
 def compute_signature(
     text: str, num_bands: int = NUM_BANDS, rows_per_band: int = ROWS_PER_BAND
 ) -> list[int]:
-    """cdcr.rs:350-366 — minhash signature of the lowercased text (u64s).
-
-    Duplicate grams are collapsed first (min over duplicates == min over
-    the set); per-gram hash vectors are memoized and the row-min is one
-    numpy reduction.
-    """
+    """cdcr.rs:350-366 — minhash signature of the lowercased text (u64s):
+    row 0 of :func:`signature_matrix` over ``[text]``."""
     import numpy as np
 
-    normalized = text.lower()
-    total = num_bands * rows_per_band
-    grams = set(extract_ngrams(normalized))
-    if not grams:
-        return [_M64] * total
-    stacked = np.stack([_gram_hashes(g, total) for g in grams])
-    return [int(v) for v in stacked.min(axis=0)]
+    sig, _ = signature_matrix([text], num_bands, rows_per_band)
+    return sig[0].view(np.uint64).tolist()
 
 
 def band_hashes(sig: list[int], num_bands: int = NUM_BANDS, rows_per_band: int = ROWS_PER_BAND) -> list[int]:
@@ -115,29 +79,21 @@ def band_hashes(sig: list[int], num_bands: int = NUM_BANDS, rows_per_band: int =
     return out
 
 
-def band_hash_matrix(surfaces):
-    """Band hashes of many texts at once → (n, NUM_BANDS) int64, row i
-    bit-identical to ``to_i64(band_hashes(compute_signature(surfaces[i])))``
-    (None reads as ""). The batched form of that reference: FNV-1a over
-    the DISTINCT grams of the whole batch, one vectorized step per byte
-    position, then ``np.minimum.reduceat`` per text and the wrapping
-    ``acc * 31 + v`` band fold, in uint64 (numpy arrays wrap like the
-    reference's ``& _M64``)."""
+# Gram bound of one kernel pass of signature_matrix: its hash matrix and
+# per-row gathers grow with the grams of a pass, so a batch of long pages
+# is hashed in passes of at most this many grams (a text with more is
+# split across passes; its row is the min over them). A pass holds ~600
+# page texts of ~270 chars (~220 distinct grams each) or ~8k resolve keys.
+SIGNATURE_PASS_GRAMS = 1 << 17
+
+
+def _pass_minima(gram_id: dict, flat: list, starts: list, total: int):
+    """One kernel pass: FNV-1a of every distinct gram in ``gram_id``
+    under the ``total`` seeds, one vectorized step per byte position,
+    then ``np.minimum.reduceat`` over each segment of ``flat`` (gram ids,
+    segments starting at ``starts``) → (total, segments) uint64."""
     import numpy as np
 
-    total = NUM_BANDS * ROWS_PER_BAND
-    gram_id: dict[str, int] = {}
-    flat, starts = [], []
-    for s in surfaces:
-        starts.append(len(flat))
-        # every text has ≥ 1 gram ("" hashes the empty byte string), so
-        # no reduceat segment below is empty
-        flat.extend(
-            gram_id.setdefault(g, len(gram_id))
-            for g in set(extract_ngrams((s or "").lower()))
-        )
-    if not starts:
-        return np.zeros((0, NUM_BANDS), dtype=np.int64)
     encoded = [g.encode("utf-8") for g in gram_id]
     lens = np.fromiter(map(len, encoded), dtype=np.int64, count=len(encoded))
     # zero byte appended so padded positions index inside the buffer
@@ -149,8 +105,7 @@ def band_hash_matrix(surfaces):
     byte = np.where(live, buf[np.minimum(offs[:, None] + pos, len(buf) - 1)], 0)
     byte = byte.astype(np.uint64)
     # (signature row, gram) layout: each row's gather below is one
-    # contiguous (total grams,) copy, never a (total grams × 15) one,
-    # which would be ~70 MB for a 16k-key Arrow batch
+    # contiguous (pass grams,) copy, never a (pass grams × total) one
     h = np.repeat(
         (np.arange(total, dtype=np.uint64) + np.uint64(_FNV_OFFSET))[:, None],
         len(encoded),
@@ -160,11 +115,67 @@ def band_hash_matrix(surfaces):
     for p in range(width):
         h = np.where(live[:, p], (h ^ byte[:, p]) * prime, h)
     flat = np.asarray(flat, dtype=np.int64)
-    sig = np.stack([np.minimum.reduceat(row[flat], starts) for row in h])
-    acc = np.zeros((NUM_BANDS, len(starts)), dtype=np.uint64)
-    for r in range(ROWS_PER_BAND):
-        acc = acc * np.uint64(31) + sig[r::ROWS_PER_BAND]
-    return np.ascontiguousarray(acc.T).view(np.int64)
+    return np.stack([np.minimum.reduceat(row[flat], starts) for row in h])
+
+
+def signature_matrix(
+    texts, num_bands: int = NUM_BANDS, rows_per_band: int = ROWS_PER_BAND
+):
+    """Minhash signatures and band hashes of many texts at once →
+    ``(sig, bands)``, (n, num_bands·rows_per_band) and (n, num_bands)
+    int64, row i bit-identical to ``to_i64`` of the reference per-row
+    min of ``fnv1a_seeded`` over the distinct grams of ``texts[i]``
+    lowercased and its ``band_hashes`` (None reads as ""). Distinct
+    grams are hashed once per pass, one numpy step per byte position;
+    the band fold is the wrapping ``acc * 31 + v`` in uint64 (numpy
+    arrays wrap like the reference's ``& _M64``). Passes hold at most
+    ``SIGNATURE_PASS_GRAMS`` grams, so memory is bounded per pass, not
+    per batch."""
+    import numpy as np
+
+    total = num_bands * rows_per_band
+    cap = SIGNATURE_PASS_GRAMS
+    passes, owner = [], []
+    gram_id: dict[str, int] = {}
+    flat: list[int] = []
+    starts: list[int] = []
+    for i, s in enumerate(texts):
+        # every text has ≥ 1 gram ("" hashes the empty byte string), so
+        # no reduceat segment is empty
+        grams = set(extract_ngrams((s or "").lower()))
+        if len(grams) > cap:
+            grams = list(grams)
+            segments = [grams[lo : lo + cap] for lo in range(0, len(grams), cap)]
+        else:
+            segments = (grams,)
+        for seg in segments:
+            if starts and len(flat) + len(seg) > cap:
+                passes.append(_pass_minima(gram_id, flat, starts, total))
+                gram_id, flat, starts = {}, [], []
+            starts.append(len(flat))
+            owner.append(i)
+            flat.extend(gram_id.setdefault(g, len(gram_id)) for g in seg)
+    if not owner:
+        z = np.zeros((0, total), dtype=np.int64)
+        return z, z[:, :num_bands]
+    passes.append(_pass_minima(gram_id, flat, starts, total))
+    # a split text's row is the min over its segments
+    owner = np.asarray(owner)
+    first = np.flatnonzero(np.r_[True, owner[1:] != owner[:-1]])
+    sig = np.minimum.reduceat(np.concatenate(passes, axis=1), first, axis=1)
+    acc = np.zeros((num_bands, sig.shape[1]), dtype=np.uint64)
+    for r in range(rows_per_band):
+        acc = acc * np.uint64(31) + sig[r::rows_per_band]
+    return (
+        np.ascontiguousarray(sig.T).view(np.int64),
+        np.ascontiguousarray(acc.T).view(np.int64),
+    )
+
+
+def band_hash_matrix(surfaces):
+    """Band hashes of many texts at once → (n, NUM_BANDS) int64: the CDCR
+    geometry of :func:`signature_matrix`."""
+    return signature_matrix(surfaces)[1]
 
 
 def signature_similarity(sig1: list[int], sig2: list[int]) -> float:
@@ -278,3 +289,57 @@ def bucket_pairs(index: BucketIndex, ii, band):
     shared = (oa == bucket_of[ib]) & (oa >= 0)
     keep = shared.argmax(axis=1) == np.repeat(band, counts)
     return ia[keep], ib[keep]
+
+
+# Pair visits per bucket_pairs call in scored_pairs: its transients are
+# ~150 B per visit at 8 bands (the (visits × bands) bucket-ordinal
+# gathers of the emit-once test), so ~2.5 MB per chunk whatever the
+# bucket sizes. Cache-sized chunks also ran fastest: 3.76M visits of
+# the benchmark's page texts scored in 0.6 s at 2^13-2^14 visits per
+# chunk, 0.9 s at 2^16-2^20 (one core).
+SCORE_CHUNK_VISITS = 1 << 14
+
+
+def scored_pairs(index: BucketIndex, sig, ii, band, threshold: float | None):
+    """Emit-once pairs of the (row ``ii[j]``, band ``band[j]``) entries
+    (:func:`bucket_pairs`) scored by estimated Jaccard = the fraction of
+    agreeing columns of ``sig`` (n × signature length) → ``(ia, ib,
+    est)``; ``threshold`` None keeps every pair. The entries are
+    expanded in chunks of ≤ ``SCORE_CHUNK_VISITS`` pair visits, and
+    agreement is counted one signature column at a time, so no
+    (pairs × signature length) gather exists. A Fortran-ordered ``sig``
+    makes each column gather contiguous."""
+    import numpy as np
+
+    flat, boff, blen, bucket_of, rank_of = index
+    ord_ = bucket_of[ii, band]
+    visits = np.zeros(len(ii), dtype=np.int64)
+    ok = ord_ >= 0
+    visits[ok] = blen[ord_[ok]] - rank_of[ii[ok], band[ok]] - 1
+    cum = np.cumsum(visits)
+    total = int(cum[-1]) if len(cum) else 0
+    cuts = np.searchsorted(
+        cum, np.arange(SCORE_CHUNK_VISITS, total, SCORE_CHUNK_VISITS), side="right"
+    )
+    bounds = np.r_[0, cuts, len(ii)]
+    sig_len = sig.shape[1]
+    out_a, out_b, out_est = [], [], []
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        if lo == hi:
+            continue
+        ia, ib = bucket_pairs(index, ii[lo:hi], band[lo:hi])
+        agree = np.zeros(len(ia), dtype=np.int64)
+        for c in range(sig_len):
+            col = sig[:, c]
+            agree += col[ia] == col[ib]
+        est = agree / float(sig_len)
+        if threshold is not None:
+            good = est >= threshold
+            ia, ib, est = ia[good], ib[good], est[good]
+        out_a.append(ia)
+        out_b.append(ib)
+        out_est.append(est)
+    if not out_a:
+        empty = np.zeros(0, dtype=np.int64)
+        return empty, empty, np.zeros(0)
+    return np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_est)

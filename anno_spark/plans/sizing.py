@@ -3,10 +3,13 @@
 Every banded blocker (CDCR candidate pairs, minhash/simhash/embedding
 dedup, binary-hash ANN) decides between a small path and the shuffled
 web-scale join. The small path is a broadcast-build band join, except
-for document minhash near-dup, whose small path is the one in-process
-pair kernel (``core.minhash.bucket_index``/``bucket_pairs``, bucket cap
-applied inside the index); the CDCR resolver's driver branch, gated
-before its band join, runs the same kernel.
+for document minhash near-dup and the CDCR resolver's driver branch,
+which run the one in-process pair kernel (``core.minhash.bucket_index``
+/ ``bucket_pairs``, bucket cap applied inside the index). Document
+near-dup has three tiers: driver (pairs scored in driver memory by
+``core.minhash.scored_pairs``, gated on docs, bytes and pair visits),
+broadcast UDF (the index broadcast to a fused, spread scorer, gated on
+bytes) and shuffled join.
 
 Round 2 made that decision with a
 ``localCheckpoint()`` (one materialization job) followed by a

@@ -6,7 +6,8 @@ off), with and without a bucket cap, with and without (null) timestamps,
 under a session time zone other than the process's, and on empty input;
 that the driver branch runs only its count and collect and returns local
 relations; and that a hot bucket under the key gate trips the pair-count
-gate instead of the Python pair loop."""
+gate instead of the Python pair loop. Plus document minhash near-dup's
+three tiers (driver, broadcast UDF, shuffled) against each other."""
 
 from __future__ import annotations
 
@@ -218,28 +219,109 @@ def test_cdcr_oracles_match_on_distributed_branch(spark, sf_dir, duck, monkeypat
         materialize.reset()
 
 
-def test_minhash_driver_cluster_assembly_matches_distributed(spark, monkeypatch):
-    """r06: the driver cluster-assembly tail of minhash_near_duplicates
-    (edges + doc->sig collected, union-find + fan-out in numpy) must
-    produce the same (cluster_id, doc_id) set as the distributed
-    CC + join + groupBy tail."""
-    import anno_spark.operators.dedup as dd
-
+def _near_dup_docs(spark):
+    """Near-dup families, identical-signature groups (identical texts,
+    and texts that differ only in case, which lowercase to the same
+    grams) and one hot bucket: 1,050 docs that differ only in a trailing
+    number share most band hashes, so those buckets hold more than the
+    1000-member cap and are dropped, while the bands their suffix grams
+    decide keep smaller buckets."""
     rows = []
     base = "the quick brown fox jumps over the lazy dog wearing pants "
     for fam in range(12):
         for v in range(6):
             rows.append((fam * 100 + v, base + f"family {fam} variant edit {v % 2}"))
-    for i in (5000, 5001):  # identical-signature pair with no edges needed
+    for i in (5000, 5001, 5002):  # identical-signature group, no edge needed
         rows.append((i, "completely identical text"))
+    rows += [(5100, "Case Folded Twins"), (5101, "case folded twins")]
     rows += [(9000 + i, f"unique document number {i} with distinct words {i*7}") for i in range(20)]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    hot = "a long shared boilerplate footer that every mirrored page repeats verbatim "
+    rows += [(20_000 + i, hot * 3 + f"mirror {i}") for i in range(1050)]
+    return spark.createDataFrame(rows, "doc_id bigint, text string")
 
-    fast = {(r["cluster_id"], r["doc_id"]) for r in dd.minhash_near_duplicates(docs).collect()}
+
+def test_minhash_driver_cluster_assembly_matches_distributed(spark, monkeypatch):
+    """The driver tier (in-process pairs + union-find + fan-out), the
+    broadcast-UDF tier (``DRIVER_DEDUP_MAX_PAIR_VISITS = 0``: fused
+    scorer, driver cluster assembly) and the distributed tier
+    (``DRIVER_CLUSTER_MAX_DOCS = -1``: shuffled CC, fan-out and size
+    joins) give the same (cluster_id, doc_id) set, and so does the
+    forced fallback (shuffled band join too); each run is checked to
+    take its branch."""
+    import anno_spark.operators.dedup as dd
+
+    docs = _near_dup_docs(spark)
+    ran = []
+
+    def spy(name, fn, tier=None):
+        def wrapped(*args, **kwargs):
+            out = fn(*args, **kwargs)
+            if tier is None or out is not None:
+                ran.append(tier or name)
+            return out
+
+        monkeypatch.setattr(dd, name, wrapped)
+
+    spy("_driver_near_duplicates", dd._driver_near_duplicates, "driver")
+    spy("_pair_gen_score_udf", dd._pair_gen_score_udf)
+    spy("connected_components", dd.connected_components)
+
+    def clusters():
+        ran.clear()
+        return {(r["cluster_id"], r["doc_id"]) for r in dd.minhash_near_duplicates(docs).collect()}
+
+    driver = clusters()
+    assert ran == ["driver"]
+    monkeypatch.setattr(dd, "DRIVER_DEDUP_MAX_PAIR_VISITS", 0)
+    udf = clusters()
+    assert ran == ["_pair_gen_score_udf"]
     monkeypatch.setattr(dd, "DRIVER_CLUSTER_MAX_DOCS", -1)
-    slow = {(r["cluster_id"], r["doc_id"]) for r in dd.minhash_near_duplicates(docs).collect()}
-    assert fast == slow
-    assert len(fast) > 0
+    distributed = clusters()
+    assert ran == ["_pair_gen_score_udf", "connected_components"]
+    # and every gate "too big": pairs and scores from the JVM band join,
+    # the reference the in-process scorer of the other tiers is held to
+    monkeypatch.setenv("SPARK_GRAFT_FORCE_FALLBACK", "1")
+    shuffled = clusters()
+    assert ran == ["connected_components"]
+    assert driver == udf == distributed == shuffled
+    by_doc = dict((d, c) for c, d in driver)
+    assert by_doc[5000] == by_doc[5001] == by_doc[5002]
+    assert by_doc[5100] == by_doc[5101]
+    # the hot family still clusters through the bands under the cap
+    assert sum(1 for d in by_doc if d >= 20_000) > 1
+
+
+def test_minhash_driver_tier_runs_no_python_worker(spark):
+    """On an eagerly checkpointed signature table the driver tier runs
+    the gate's count and one collect, and no ``MapInPandas``: at most 3
+    jobs. Before the driver tier existed, the small path always
+    broadcast the bucket index to the fused scorer, and the same call
+    ran 11 jobs, one of them over ``MapInPandas``."""
+    import anno_spark.operators.dedup as dd
+
+    docs = _near_dup_docs(spark)
+    sigs = dd.doc_signatures_with_id(docs).localCheckpoint()
+    sc = spark.sparkContext
+    group = "test-minhash-driver-tier-jobs"
+    sc.setJobGroup(group, "minhash_near_duplicates, driver tier")
+    try:
+        out = dd.minhash_near_duplicates(docs, sigs=sigs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < len(jobs) <= 3, sorted(jobs)
+    store = spark._jsparkSession.sharedState().statusStore()
+    executions = store.executionsList()
+    plans = []
+    for i in range(executions.size()):
+        ex = executions.apply(i)
+        ex_jobs = ex.jobs().keySet().toList()
+        if any(ex_jobs.apply(j) in jobs for j in range(ex_jobs.size())):
+            plans.append(ex.physicalPlanDescription())
+    assert plans
+    assert not [p for p in plans if "MapInPandas" in p]
+    assert "LocalTableScan" in out._jdf.queryExecution().executedPlan().toString()
 
 
 def test_minhash_near_duplicates_empty_input(spark):

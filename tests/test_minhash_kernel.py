@@ -2,8 +2,9 @@
 bucket_pairs) against an all-pairs brute force: a pair is a candidate
 iff the two rows share at least one KEPT bucket (same hash in some band
 whose bucket holds ≤ cap rows), and the kernel emits each such pair
-exactly once. Plus the batched band-hash kernel (band_hash_matrix)
-against the per-text reference signature."""
+exactly once. Plus the batched signature kernel (signature_matrix, and
+band_hash_matrix, its CDCR geometry) against a plain per-text
+reference: the per-row min of fnv1a_seeded over the distinct grams."""
 
 from __future__ import annotations
 
@@ -13,14 +14,29 @@ import random
 import numpy as np
 import pytest
 
+import anno_spark.core.minhash as mh
 from anno_spark.core.minhash import (
     band_hash_matrix,
     band_hashes,
     bucket_index,
     bucket_pairs,
     compute_signature,
+    scored_pairs,
+    extract_ngrams,
+    fnv1a_seeded,
+    signature_matrix,
     to_i64,
 )
+
+
+def _ref_signature(text, num_bands=mh.NUM_BANDS, rows_per_band=mh.ROWS_PER_BAND):
+    """Row r = min over the distinct grams of the lowercased text of
+    fnv1a_seeded(gram, seed=r); None reads as ""."""
+    grams = {g.encode("utf-8") for g in extract_ngrams((text or "").lower())}
+    return [
+        min(fnv1a_seeded(g, r) for g in grams)
+        for r in range(num_bands * rows_per_band)
+    ]
 
 
 def _brute(bh, cap):
@@ -119,8 +135,37 @@ def test_bucket_pairs_on_a_subset_of_rows():
     assert len(got) == len(set(got)) and set(got) == full
 
 
+@pytest.mark.parametrize("chunk", [1, 7, 1 << 14])
+@pytest.mark.parametrize("threshold", [None, 0.5])
+def test_scored_pairs_match_brute_force(monkeypatch, chunk, threshold):
+    """Every pair sharing a kept bucket, once, with est = fraction of
+    equal signature columns, whatever the chunking of the expansion (1
+    and 7 visits per chunk split single buckets' entries across chunks),
+    on a C- and a Fortran-ordered signature matrix."""
+    monkeypatch.setattr(mh, "SCORE_CHUNK_VISITS", chunk)
+    rng = np.random.default_rng(5)
+    sig = rng.integers(0, 3, size=(70, 12)).astype(np.int64)
+    bh = sig[:, ::3] * 9 + sig[:, 1::3] * 3 + sig[:, 2::3]  # 4 bands × 3 rows
+    cap = 15
+    want = {
+        (a, b): float((sig[a] == sig[b]).mean())
+        for a, b in _brute(bh, cap)
+        if threshold is None or (sig[a] == sig[b]).mean() >= threshold
+    }
+    index = bucket_index(bh, cap)
+    ii, band = np.repeat(np.arange(70), 4), np.tile(np.arange(4), 70)
+    for layout in (sig, np.asfortranarray(sig)):
+        ia, ib, est = scored_pairs(index, layout, ii, band, threshold)
+        got = list(zip(ia.tolist(), ib.tolist()))
+        assert len(got) == len(set(got))
+        assert dict(zip(got, est.tolist())) == want
+    assert want and (threshold is None or len(want) < len(_brute(bh, cap)))
+    empty = scored_pairs(index, sig, ii[:0], band[:0], threshold)
+    assert [len(x) for x in empty] == [0, 0, 0]
+
+
 def test_band_hash_matrix_matches_reference():
-    """Bit-identical to to_i64(band_hashes(compute_signature(s))) per
+    """Bit-identical to to_i64(band_hashes(reference signature)) per
     text: empty and 1-2 char texts (hashed whole), upper case (the
     reference lowercases), None (read as ""), CJK, supplementary-plane
     and full-width characters (multi-byte UTF-8 grams of different
@@ -133,10 +178,65 @@ def test_band_hash_matrix_matches_reference():
         "aaaa", "aaaaaaa", "İstanbul", "acme corporation unit 5",
     ] + ["".join(rng.choice(alphabet) for _ in range(rng.randint(0, 24))) for _ in range(3000)]
     ref = np.array(
-        [[to_i64(b) for b in band_hashes(compute_signature(s or ""))] for s in surfaces],
+        [[to_i64(b) for b in band_hashes(_ref_signature(s))] for s in surfaces],
         dtype=np.int64,
     )
     got = band_hash_matrix(surfaces)
     assert got.dtype == np.int64
     np.testing.assert_array_equal(got, ref)
     assert band_hash_matrix([]).shape == (0, ref.shape[1])
+
+
+def _doc_texts():
+    from anno_spark.corpus import page_record
+
+    rng = random.Random(7)
+    ids = rng.sample(range(200_000), 300)
+    return [page_record(i)["text"] for i in ids] + [
+        "", None, "a", "Ab", "東京", "東", "𝔸", "𝔸ｘ", "ｘ𝔸東タワー",
+        "İstanbul ÉTÉ ÉTÉ", "𝔸𝔸𝔸𝔸 𝔸𝔸𝔸𝔸 𝔸𝔸𝔸𝔸",
+    ]
+
+
+def _check_doc_geometry(texts):
+    ref_sig = [_ref_signature(t, 8, 4) for t in texts]
+    sig, bands = signature_matrix(texts, 8, 4)
+    assert sig.dtype == bands.dtype == np.int64
+    assert sig.shape == (len(texts), 32) and bands.shape == (len(texts), 8)
+    np.testing.assert_array_equal(
+        sig, np.array([[to_i64(v) for v in r] for r in ref_sig], dtype=np.int64).reshape(-1, 32)
+    )
+    np.testing.assert_array_equal(
+        bands,
+        np.array(
+            [[to_i64(b) for b in band_hashes(r, 8, 4)] for r in ref_sig], dtype=np.int64
+        ).reshape(-1, 8),
+    )
+
+
+def test_signature_matrix_document_geometry_matches_reference():
+    """The document near-dup geometry (8 bands × 4 rows) on seeded
+    corpus page texts plus empty, None, 1-2 char, CJK and
+    supplementary-plane texts: both the signature and the band hashes;
+    and 0 texts keep both shapes."""
+    _check_doc_geometry(_doc_texts())
+    sig, bands = signature_matrix([], 8, 4)
+    assert sig.shape == (0, 32) and bands.shape == (0, 8)
+
+
+def test_signature_matrix_splits_passes(monkeypatch):
+    """With the per-pass gram bound lowered, one batch is hashed in many
+    passes, and the longest page text alone holds more distinct grams
+    than a pass, so its row is the min over several passes; the output
+    is unchanged."""
+    texts = _doc_texts()
+    longest = max(len(set(extract_ngrams((t or "").lower()))) for t in texts)
+    monkeypatch.setattr(mh, "SIGNATURE_PASS_GRAMS", 97)
+    assert longest > 2 * mh.SIGNATURE_PASS_GRAMS
+    _check_doc_geometry(texts)
+
+
+def test_compute_signature_is_row_zero_of_the_kernel():
+    for text in ("", "ab", "Acme Corp", "東京タワー"):
+        assert compute_signature(text) == _ref_signature(text)
+        assert compute_signature(text, 8, 4) == _ref_signature(text, 8, 4)
