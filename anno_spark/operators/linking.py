@@ -14,8 +14,8 @@ already the deduplicated distinct-surface table, so hot surfaces ("the
 company") are single rows — the skew that would otherwise need salting
 was removed structurally. Every KB-side join (bands, IDF, postings,
 alias dimension) is BYTE-GATED (VERDICT r03 next #6): broadcast while
-the estimated size fits plans.sizing.MAX_BROADCAST_BYTES, else a plain
-shuffled equi-join that AQE manages — a 10⁶-alias KB (postings ≈ 1.5·10⁷
+the estimated size fits plans.sizing.MAX_BROADCAST_BYTES, else a
+merge-hinted shuffled equi-join — a 10⁶-alias KB (postings ≈ 1.8·10⁷
 rows) linked the same code path as the 19-entry demo KB.
 """
 
@@ -102,9 +102,10 @@ def build_kb_index(spark: SparkSession, kb_aliases: DataFrame) -> dict:
 
 def _kb_side(df: DataFrame, n_rows: int, bytes_per_row: int) -> DataFrame:
     """Broadcast the KB-side table only while its estimated bytes fit
-    the budget; past it, return the table un-hinted so the join shuffles
-    (and AQE may still pick a broadcast if the runtime size allows)."""
-    return F.broadcast(df) if fits_broadcast(n_rows, bytes_per_row) else df
+    the budget; past it, hint a merge join: a checkpointed table keeps
+    its source plan's size estimate (9.8 MB for 1.8·10⁷ postings), so
+    the planner would broadcast it anyway (a 2.7 GB hash table)."""
+    return F.broadcast(df) if fits_broadcast(n_rows, bytes_per_row) else df.hint("merge")
 
 
 def link_candidates(surfaces: DataFrame, kb_index: dict) -> DataFrame:
@@ -140,7 +141,7 @@ def link_candidates(surfaces: DataFrame, kb_index: dict) -> DataFrame:
     if not kb_small:
         surf_bands = band_table(surfaces)
         return (
-            surf_bands.join(alias_bands, ["band", "band_hash"])
+            surf_bands.join(alias_bands.hint("merge"), ["band", "band_hash"])
             .select("key_id", "alias_id")
             .dropDuplicates(["key_id", "alias_id"])
         )

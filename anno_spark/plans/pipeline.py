@@ -6,15 +6,19 @@
                         └──▶ tracks            └───G1/G2─▶ nodes ◀┘
 
 Every stage commits a snapshot through SnapshotStore; ``run`` resumes
-from the last committed stage. A ``lineage_metrics`` table (stage,
-partition_id, counts, snapshot_id) is written alongside each commit
-(north rule: per-partition lineage + extraction-count metrics).
+from the last committed stage. ``surface_components`` and ``identities``
+come from one ``resolve_mentions`` call (the read path's) and commit and
+resume together. Each commit appends its manifest's per-file row counts
+to ``lineage_metrics`` (stage, partition_id = file index, rows,
+snapshot_id; north rule: per-partition lineage + extraction counts).
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,20 +46,14 @@ class PipelineResult:
     computed_stages: list = field(default_factory=list)
 
 
-def _commit_metrics(store: SnapshotStore, spark: SparkSession, stage: str, df: DataFrame):
-    """Append per-partition row counts for <stage> to lineage_metrics."""
-    import os
-
-    info = store.committed(stage)
-    metrics = (
-        df.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(F.count("*").alias("rows"))
-        .withColumn("stage", F.lit(stage))
-        .withColumn("snapshot_id", F.lit(info["snapshot_id"] if info else None))
-    )
-    out = os.path.join(store.root, "lineage_metrics")
-    metrics.write.mode("append").parquet(out)
+def _commit_metrics(store: SnapshotStore, spark: SparkSession, stage: str, entry: dict):
+    """Append the per-file row counts of <stage>'s commit to
+    lineage_metrics as one file (a local relation splits per core)."""
+    rows = [(i, n, stage, entry["snapshot_id"]) for i, n in enumerate(entry["files"].values())]
+    metrics = pd.DataFrame(rows, columns=["partition_id", "rows", "stage", "snapshot_id"])
+    spark.createDataFrame(
+        metrics, "partition_id int, rows bigint, stage string, snapshot_id string"
+    ).coalesce(1).write.mode("append").parquet(os.path.join(store.root, "lineage_metrics"))
 
 
 def run(
@@ -71,22 +69,28 @@ def run(
     fully in-memory (tests / small corpora)."""
     res = PipelineResult()
 
-    def stage(name: str, compute):
+    def commit(name: str, df: DataFrame) -> DataFrame:
         if store is not None:
-            cached = store.load(spark, name)
-            if cached is not None:
-                res.resumed_stages.append(name)
-                res.tables[name] = cached
-                return cached
-        df = compute()
-        if store is not None:
-            bucket_by = (32, "identity_id") if name in ("identities",) else None
-            store.commit(name, df, bucket_by=bucket_by)
+            bucket_by = (32, "identity_id") if name == "identities" else None
+            entry = store.commit(name, df, bucket_by=bucket_by)
+            _commit_metrics(store, spark, name, entry)
             df = store.load(spark, name)
-            _commit_metrics(store, spark, name, df)
         res.computed_stages.append(name)
-        res.tables[name] = df
         return df
+
+    def stages(names: tuple, compute) -> list:
+        """Resume ``names`` from their snapshots when all are committed;
+        else compute them together and commit each."""
+        if store is not None and all(store.committed(n) for n in names):
+            res.resumed_stages.extend(names)
+            dfs = [store.load(spark, n) for n in names]
+        else:
+            dfs = [commit(n, df) for n, df in zip(names, compute())]
+        res.tables.update(zip(names, dfs))
+        return dfs
+
+    def stage(name: str, compute) -> DataFrame:
+        return stages((name,), lambda: (compute(),))[0]
 
     extracted = stage("extracted", lambda: ex.extract_documents(pages))
     if store is None:
@@ -101,23 +105,13 @@ def run(
     if stop_after in ("mentions", "triples", "tracks"):
         return res
 
-    def compute_components():
-        keys = rx.surface_keys(mentions).localCheckpoint(eager=False)
-        res = rx.resolve_keys(keys, min_similarity, require_type_match, max_bucket_size)
-        return keys.join(res.components, "key_id")
-
-    keyed = stage("surface_components", compute_components)
-    if stop_after == "surface_components":
-        return res
-
-    identities = stage(
-        "identities",
-        lambda: rx.identities_table(
-            keyed.drop("component_id"),
-            keyed.select("key_id", "component_id"),
-        ),
+    keyed, identities = stages(
+        ("surface_components", "identities"),
+        lambda: rx.resolve_mentions(
+            mentions, min_similarity, require_type_match, max_bucket_size
+        )[:2],
     )
-    if stop_after == "identities":
+    if stop_after in ("surface_components", "identities"):
         return res
 
     nodes = stage("nodes", lambda: g.nodes_table(identities))

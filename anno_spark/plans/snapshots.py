@@ -3,31 +3,44 @@
 Models Iceberg's snapshot semantics on top of plain parquet so the
 pipeline runs in this jar-less sandbox unchanged: each stage writes its
 output table to ``<root>/<stage>/<snapshot_id>/`` and then atomically
-records {stage → snapshot_id, row_count} in ``manifest.json``. A re-run
-finds the committed snapshot and reads it instead of recomputing — the
-"resume from the last committed snapshot" contract (north rule). On a
-real deployment ``format="iceberg"`` + a catalog name makes each commit
-an Iceberg snapshot and the manifest collapses into Iceberg's own
-metadata; nothing downstream changes.
+records {stage → snapshot_id, rows, files, schema} in ``manifest.json``:
+like Iceberg metadata, what the one write produced — each data file's
+row count from the parquet footers just written (no Spark job; ``rows``
+is their sum) and the written schema, which ``load`` reads with (no
+inference job). A re-run reads the committed snapshot instead of
+recomputing — the "resume from the last committed snapshot" contract.
 
 The write is made atomic the same way Iceberg's metadata swap is: data
-lands under a snapshot directory first, the manifest pointer flips last
+lands under a snapshot directory first, every footer is read (which
+also proves each file complete), and the manifest pointer flips last
 (os.replace on a temp file).
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def written_files(path: str) -> dict[str, int]:
+    """{file: rows} for every parquet data file under ``path`` (names
+    relative to it, sorted), each count read from the file's footer on
+    the driver. A file the writer left incomplete has no footer and
+    raises."""
+    import pyarrow.parquet as pq
+
+    names = sorted(glob.glob("**/*.parquet", root_dir=path, recursive=True))
+    return {n: pq.read_metadata(os.path.join(path, n)).num_rows for n in names}
 
 
 class SnapshotStore:
-    def __init__(self, root: str, fmt: str = "parquet"):
+    def __init__(self, root: str):
         self.root = root
-        self.fmt = fmt
         os.makedirs(root, exist_ok=True)
         self.manifest_path = os.path.join(root, "manifest.json")
 
@@ -53,15 +66,8 @@ class SnapshotStore:
         self._write_manifest(m)
 
     # -- table IO ----------------------------------------------------------
-    def path(self, stage: str, snapshot_id: str) -> str:
-        return os.path.join(self.root, stage, snapshot_id)
-
     def commit(
-        self,
-        stage: str,
-        df: DataFrame,
-        partition_by: list[str] | None = None,
-        bucket_by: tuple[int, str] | None = None,
+        self, stage: str, df: DataFrame, bucket_by: tuple[int, str] | None = None
     ) -> dict:
         """Write df as the new snapshot of <stage> and commit it.
 
@@ -73,23 +79,23 @@ class SnapshotStore:
         from pyspark.sql import functions as F
 
         snapshot_id = uuid.uuid4().hex[:12]
-        out = self.path(stage, snapshot_id)
-        writer_df = df
-        if bucket_by is not None:
+        out = os.path.join(self.root, stage, snapshot_id)
+        if bucket_by is None:
+            writer_df, w = df, df.write
+        else:
             n, col = bucket_by
             writer_df = df.withColumn("bucket", F.pmod(F.xxhash64(col), F.lit(n)))
-            partition_by = (partition_by or []) + ["bucket"]
-        w = writer_df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.format(self.fmt).save(out)
+            w = writer_df.write.partitionBy("bucket")
+        w.mode("overwrite").parquet(out)
 
-        n_rows = df.sparkSession.read.format(self.fmt).load(out).count()
+        files = written_files(out)
         m = self._read_manifest()
         entry = {
             "snapshot_id": snapshot_id,
             "path": out,
-            "rows": n_rows,
+            "rows": sum(files.values()),
+            "files": files,
+            "schema": writer_df.schema.json(),
         }
         m["stages"][stage] = entry
         # Iceberg-style snapshot log: every commit is retained (data dirs
@@ -122,18 +128,15 @@ class SnapshotStore:
         snapshot_id: str | None = None,
     ) -> DataFrame | None:
         """Read the current snapshot of <stage>, or time-travel to a
-        specific ``snapshot_id`` from the history."""
-        if snapshot_id is not None:
-            info = next(
-                (
-                    e
-                    for e in self.history(stage)
-                    if e["snapshot_id"] == snapshot_id
-                ),
-                None,
-            )
-        else:
+        specific ``snapshot_id`` from the history, with the schema its
+        commit recorded."""
+        if snapshot_id is None:
             info = self.committed(stage)
+        else:
+            info = next(
+                (e for e in self.history(stage) if e["snapshot_id"] == snapshot_id), None
+            )
         if info is None:
             return None
-        return spark.read.format(self.fmt).load(info["path"]).drop("bucket")
+        schema = StructType.fromJson(json.loads(info["schema"]))
+        return spark.read.schema(schema).parquet(info["path"]).drop("bucket")

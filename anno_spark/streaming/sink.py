@@ -21,7 +21,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.snapshots import SnapshotStore
+from ..plans.snapshots import SnapshotStore, written_files
 
 
 class StreamingSnapshotSink:
@@ -55,7 +55,7 @@ class StreamingSnapshotSink:
             return  # replayed batch: already committed, exactly-once skip
         out = os.path.join(meta["path"], f"batch={batch_id}")
         df.write.mode("overwrite").parquet(out)
-        n = df.sparkSession.read.parquet(out).count()
+        n = sum(written_files(out).values())
         # re-read the manifest AFTER the slow write, then swap atomically
         m = self.store._read_manifest()
         meta = self._meta(m)

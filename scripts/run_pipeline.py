@@ -3,7 +3,7 @@
 checkpoints and resume.
 
     spark-submit --py-files anno_spark.zip scripts/run_pipeline.py \
-        --pages <parquet-or-iceberg-path | synth:N> \
+        --pages <parquet-path | synth:N> \
         --output /path/to/lake [--resume] [--min-similarity 0.5]
 
 On a cluster, swap --master/--deploy-mode as usual; the job only talks
@@ -21,7 +21,7 @@ import sys
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--pages", required=True, help="pages table path, or synth:N")
+    ap.add_argument("--pages", required=True, help="pages parquet path, or synth:N")
     ap.add_argument("--output", required=True, help="snapshot/lake root dir")
     ap.add_argument("--resume", action="store_true", default=False)
     ap.add_argument("--min-similarity", type=float, default=0.5)

@@ -191,13 +191,98 @@ def test_resume_from_snapshots(spark, tmp_path):
     assert third.computed_stages == []
     assert third.tables["identities"].count() == n1
 
-    # lineage metrics written per stage
+    # lineage metrics: one row per data file of each commit, and per
+    # stage the manifest's rows = the snapshot's rows = their sum
     import os
 
     metrics = spark.read.parquet(os.path.join(str(tmp_path / "snap"), "lineage_metrics"))
-    stages = {r["stage"] for r in metrics.select("stage").distinct().collect()}
-    assert "extracted" in stages and "identities" in stages
     assert metrics.where("rows < 0").count() == 0
+    lineage = {}
+    for r in metrics.collect():
+        key = (r["stage"], r["snapshot_id"])
+        lineage[key] = lineage.get(key, 0) + r["rows"]
+    for name in pipeline.STAGES:
+        info = store.committed(name)
+        assert info["rows"] == store.load(spark, name).count(), name
+        assert info["rows"] == lineage[(name, info["snapshot_id"])], name
+
+    # a lost identities snapshot recomputes BOTH tables of the one
+    # resolution, with the same rows
+    before = {n: _rows(third.tables[n]) for n in ("surface_components", "identities")}
+    store.invalidate("identities")
+    fourth = pipeline.run(spark, pages, store=store, stop_after="identities")
+    assert fourth.computed_stages == ["surface_components", "identities"]
+    assert {n: _rows(fourth.tables[n]) for n in before} == before
+
+
+def _rows(df):
+    return sorted(tuple(map(str, r)) for r in df.collect())
+
+
+def _group_jobs(spark, group, fn):
+    """Spark job ids ``fn()`` ran inside job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job starts reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("case", ["plain", "bucket_by", "empty"])
+def test_commit_runs_only_its_write_and_load_runs_no_job(spark, tmp_path, case):
+    """A commit of a materialized frame runs no more jobs than a plain
+    parquet write of it (row counts and schema come from the footers it
+    wrote, not a read-back), and a load runs none (the manifest's schema,
+    not an inference job)."""
+    from anno_spark.plans.snapshots import SnapshotStore
+
+    df = spark.range(0, 300, 1, 4).selectExpr("id AS identity_id", "id % 7 AS v")
+    if case == "empty":
+        df = df.where("v < 0")
+    df = df.localCheckpoint()
+    n = df.count()
+    bucket_by = (32, "identity_id") if case == "bucket_by" else None
+    store = SnapshotStore(str(tmp_path / "snap"))
+    tag = f"test-commit-jobs-{case}"
+    plain = _group_jobs(spark, tag + "-plain", lambda: df.write.parquet(str(tmp_path / "plain")))
+    commit = _group_jobs(spark, tag, lambda: store.commit("s", df, bucket_by=bucket_by))
+    loaded = []
+    load = _group_jobs(spark, tag + "-load", lambda: loaded.append(store.load(spark, "s")))
+    assert 0 < len(commit) <= len(plain), (commit, plain)
+    assert load == []
+
+    info = store.committed("s")
+    assert info["rows"] == sum(info["files"].values()) == n
+    assert loaded[0].columns == df.columns
+    assert loaded[0].count() == n
+    if case == "empty":
+        assert list(info["files"].values()) == [0]
+    if case == "bucket_by":
+        assert {f.split("/")[0] for f in info["files"]} == {
+            f"bucket={b}" for b in range(32)
+        }
+
+
+@pytest.mark.parametrize("fallback", [False, True])
+def test_pipeline_identities_are_resolve_mentions_identities(
+    spark, tmp_path, monkeypatch, fallback
+):
+    """The committed identities are the read path's: resolve_mentions on
+    the same pages, on the driver branch and on the distributed one."""
+    from anno_spark.plans.snapshots import SnapshotStore
+
+    if fallback:
+        monkeypatch.setenv("SPARK_GRAFT_FORCE_FALLBACK", "1")
+    pages = synthesize_pages(spark, 12)
+    store = SnapshotStore(str(tmp_path / "snap"))
+    got = pipeline.run(spark, pages, store=store, stop_after="surface_components")
+    assert "identities" in got.computed_stages
+    want = rx.resolve_mentions(ex.mentions_table(ex.extract_documents(pages)))[1]
+    assert _rows(got.tables["identities"].select(*want.columns)) == _rows(want)
 
 
 def test_snapshot_time_travel_and_rollback(spark, tmp_path):
