@@ -286,29 +286,6 @@ def q_kg_communities(spark, sf_dir):
     )
 
 
-def q_kg_communities_l2(spark, sf_dir):
-    """L2 — HierarchicalLeiden (strata/src/lib.rs:38-112): level k is an
-    independent Leiden run on the SAME graph at resolution γ·2^k. The
-    oracle unions the unrolled-SQL transcription at both resolutions."""
-    from anno_spark.operators.communities import hierarchical_communities
-
-    gnodes, gedges = _graph_tables(spark, sf_dir)
-    return hierarchical_communities(
-        gnodes, gedges, levels=2, resolution=1.0, weight_col="confidence"
-    )
-
-
-def q_kg_communities_lpa(spark, sf_dir):
-    """The LPA fallback (self-voting label propagation) driver-oracled
-    via the same unrolled-SQL scheme as Leiden."""
-    from anno_spark.operators.communities import label_propagation
-
-    gnodes, gedges = _graph_tables(spark, sf_dir)
-    return label_propagation(
-        gnodes.select("node_id"), gedges, weight_col="confidence"
-    )
-
-
 def q_kg_communities_alt(spark, sf_dir):
     """L2 hierarchical Leiden and the LPA fallback folded into ONE
     driver row (surface-cap fold, VERDICT r03 next #1): (method,
@@ -391,24 +368,6 @@ def _probe_df(spark, sf_dir):
             F.lit(" budget. "),
             F.col("text"),
         ).alias("probe_text"),
-    )
-
-
-def _pattern_query(name):
-    def q(spark, sf_dir):
-        from anno_spark.functions import pattern_matches
-
-        return pattern_matches(_probe_df(spark, sf_dir), name)
-
-    return q
-
-
-def _pattern_oracle(pattern: str) -> str:
-    pat = pattern.replace("'", "''")
-    return (
-        f"WITH probe AS (SELECT doc_id, {_PROBE_SQL} AS probe_text FROM documents) "
-        f"SELECT doc_id, unnest(regexp_extract_all(probe_text, '{pat}')) AS mention "
-        f"FROM probe"
     )
 
 
@@ -506,24 +465,6 @@ _PROBE2_SQL = (
     "' see https://ex', cast(doc_id % 50 as varchar), '.org/p/', cast(doc_id as varchar), "
     "' . ', text)"
 )
-
-
-def _pattern2_query(name):
-    def q(spark, sf_dir):
-        from anno_spark.functions import pattern_matches
-
-        return pattern_matches(_probe2_df(spark, sf_dir), name)
-
-    return q
-
-
-def _pattern2_oracle(pattern: str) -> str:
-    pat = pattern.replace("'", "''")
-    return (
-        f"WITH probe AS (SELECT doc_id, {_PROBE2_SQL} AS probe_text FROM documents) "
-        f"SELECT doc_id, unnest(regexp_extract_all(probe_text, '{pat}')) AS mention "
-        f"FROM probe"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1302,12 +1243,6 @@ def q_dedup_embedding(spark, sf_dir):
     )
 
 
-def q_doc_fingerprints(spark, sf_dir):
-    from anno_spark.operators.textstats import doc_fingerprints
-
-    return doc_fingerprints(_t(spark, sf_dir, "documents"))
-
-
 CURATION_MIN_QUALITY = 0.67
 CURATION_LANGS = ("en", "de", "fr", "es")
 
@@ -1373,12 +1308,6 @@ def q_lang_profile(spark, sf_dir):
             F.round(F.avg("nt"), 6).alias("avg_tokens"),
         )
     )
-
-
-def q_doc_quality(spark, sf_dir):
-    from anno_spark.operators.textstats import quality_score
-
-    return quality_score(_t(spark, sf_dir, "documents"))
 
 
 def q_doc_profile(spark, sf_dir):

@@ -21,8 +21,6 @@ rows) linked the same code path as the 19-entry demo KB.
 
 from __future__ import annotations
 
-import math
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -31,12 +29,14 @@ from anno_spark.plans.sizing import checkpoint_count, fits_broadcast
 
 from .resolve import CDCR_NUM_BANDS, band_signatures, band_table
 
-# Per-row broadcast-size estimates (UnsafeRow + field payload; generous,
-# same convention as resolve.CDCR_BYTES_PER_KEY_EST)
-POSTING_BYTES_EST = 64      # (alias_id long, gram ≤3 chars, w double)
+# Per-row broadcast-size estimates: the built hash relation's bytes per
+# row (UnsafeRow + hash-map overhead), as the broadcast exchange's
+# dataSize metric reports it on the 10^6-alias KB (local[4]); same
+# convention as resolve.CDCR_BYTES_PER_KEY_EST
+POSTING_BYTES_EST = 150     # (alias_id, gram, w): measured 148.6 B/row
 IDF_BYTES_EST = 56          # (gram, idf double)
-ALIAS_BYTES_EST = 160       # (alias, kb_id, description, alias_id)
-BAND_BYTES_EST = 48         # (alias_id, band int, band_hash long)
+ALIAS_BYTES_EST = 168       # (alias, kb_id, description, alias_id): 167.8 B/row
+BAND_BYTES_EST = 108        # (alias_id, band, band_hash): measured 107 B/row
 
 
 def _gram_postings(df: DataFrame, key_col: str, text_col: str) -> DataFrame:

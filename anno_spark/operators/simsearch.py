@@ -9,6 +9,9 @@
   UDF, search probes the ``nprobe`` nearest centroids then exact-reranks.
   At 10⁹ vectors the probe join replaces the all-pairs cross join with a
   partition-pruned equi-join on centroid_id.
+* :func:`binary_hash_pairs` — sign-hash Hamming blocking (the shared
+  4×16-bit blocker of ``plans/sizing.py``, also behind simhash near-dup)
+  then an exact cosine rerank of the candidate pairs.
 """
 
 from __future__ import annotations
@@ -19,6 +22,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from anno_spark.plans.sizing import (
+    MAX_BROADCAST_BYTES,
+    checkpoint_count,
+    force_fallback,
+    hamming_band_pairs,
+)
 
 
 def _as_double(col):
@@ -156,8 +166,6 @@ def cosine_topk(
     e = embeddings.select("vec_id", _as_double(F.col(vec_col)).alias("v"))
     if max_brute_rows is not None:
         if n_rows is None:
-            from anno_spark.plans.sizing import checkpoint_count
-
             e, n_rows = checkpoint_count(e)
         if n_rows > max_brute_rows:
             raise ValueError(
@@ -168,8 +176,6 @@ def cosine_topk(
     q = e.where(query_filter).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    from anno_spark.plans.sizing import force_fallback
-
     q_rows = q.limit(MAX_DRIVER_QUERIES + 1).collect()
     if len(q_rows) > MAX_DRIVER_QUERIES or force_fallback():
         j = F.broadcast(q).crossJoin(e).where(F.col("vec_id") != F.col("query_id"))
@@ -318,7 +324,8 @@ def binary_hash_pairs(
     bh: DataFrame | None = None,
 ) -> DataFrame:
     """X8 two-stage retrieval (inference.rs:2178-2186): Hamming-banded
-    blocking over the sign hashes (4×16-bit bands — any pair within
+    blocking over the sign hashes (the shared 4×16-bit blocker,
+    :func:`anno_spark.plans.sizing.hamming_band_pairs` — any pair within
     Hamming ≤ 3 shares a band for sure; larger radii are recall-traded),
     then EXACT cosine rerank of the surviving candidate pairs.
 
@@ -327,54 +334,7 @@ def binary_hash_pairs(
     """
     if bh is None:
         bh = binary_hash_table(embeddings, vec_col)
-    # skew-proof band join (same shape as the dedup blockers): broadcast
-    # the build side + round-robin-spread the probe side while the hash
-    # table fits, so a hot band bucket's pair explosion parallelizes.
-    # One job: lazy checkpoint + exact count; byte-based broadcast gate
-    # (4 exploded band rows ~24 B + the 8 B hash, per vector).
-    from anno_spark.plans.sizing import (
-        checkpoint_count,
-        first_shared_band16,
-        fits_broadcast,
-        probe_spread,
-    )
-
-    bh, n_vecs = checkpoint_count(bh)
-    small = fits_broadcast(n_vecs, 4 * 24 + 16)
-    maybe_broadcast = F.broadcast if small else (lambda df: df)
-    par = bh.sparkSession.sparkContext.defaultParallelism
-    bands = bh.select(
-        "vec_id",
-        "bhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright("bhash", 16 * b).bitwiseAND(F.lit(65535)).alias("band_val"),
-                )
-                for b in range(4)
-            ])
-        ).alias("bv"),
-    ).select("vec_id", "bhash", "bv.band", "bv.band_val")
-    left = bands.select("band", "band_val", F.col("vec_id").alias("vec_a"), F.col("bhash").alias("h_a"))
-    if small:
-        left = left.repartition(probe_spread(par, n_vecs * 4))
-    right = bands.select("band", "band_val", F.col("vec_id").alias("vec_b"), F.col("bhash").alias("h_b"))
-    # emit-once pair dedup (plans/sizing.first_shared_band16): both full
-    # hashes ride the explosion, so the band-duplicate rows are removed
-    # by a codegen'd filter instead of a pairs-proportional
-    # dropDuplicates exchange — identical output set on either path
-    pairs = (
-        left.join(maybe_broadcast(right), ["band", "band_val"])
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .where(
-            F.col("band")
-            == first_shared_band16(F.col("h_a"), F.col("h_b"), 4)
-        )
-        .withColumn("hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("vec_a", "vec_b", "hamming")
-    )
+    pairs = hamming_band_pairs(bh, "vec_id", "bhash", ("vec_a", "vec_b"), max_hamming)
     e = embeddings.select("vec_id", _as_double(F.col(vec_col)).alias("v"))
     j = (
         pairs.join(e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("v_a")), "vec_a")
@@ -407,8 +367,6 @@ def ivf_topk(
     — a large query TABLE falls back to the shuffled equi-join instead
     of dying in a driver/executor broadcast OOM (VERDICT r02 wrong #3).
     Results are identical on both plans (same join, same window)."""
-    from anno_spark.plans.sizing import MAX_BROADCAST_BYTES
-
     cents = train_centroids(embeddings, n_centroids, vec_col=vec_col)
     base = embeddings.select("vec_id", F.col(vec_col).alias("embedding"))
     schema = "vec_id bigint, embedding array<float>, centroid_ids array<int>"
@@ -423,8 +381,6 @@ def ivf_topk(
     # query explodes nprobe× and carries a dim-wide double array
     dim = cents.shape[1]
     max_bq = max(MAX_BROADCAST_BYTES // (nprobe * (dim * 8 + 48)), 1)
-    from anno_spark.plans.sizing import force_fallback
-
     q_small = q_base.limit(max_bq + 1).count() <= max_bq and not force_fallback()
     queries = (
         q_base

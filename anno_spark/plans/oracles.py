@@ -869,27 +869,6 @@ def _url_parse_ctes(sf_dir: str) -> str:
     """
 
 
-def web_url_parts(sf_dir: str) -> str:
-    return f"""
-        WITH {_url_parse_ctes(sf_dir)}
-        SELECT url, host, domain, tld, CAST(path_depth AS INTEGER) AS path_depth
-        FROM y
-    """
-
-
-def web_domains(sf_dir: str) -> str:
-    return f"""
-        WITH {_url_parse_ctes(sf_dir)}
-        SELECT domain, count(*) AS n_pages,
-               count(DISTINCT host) AS n_hosts,
-               round(avg(path_depth), 6) AS avg_path_depth,
-               count(DISTINCT lang) AS n_langs,
-               min(warc_ts) AS first_crawl,
-               max(warc_ts) AS last_crawl
-        FROM y GROUP BY domain
-    """
-
-
 def web_profile(sf_dir: str) -> str:
     """url_parts + domain_profile as one tagged union (r04 surface fold);
     each arm NULL-pads the other's typed columns."""

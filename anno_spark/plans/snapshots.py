@@ -71,10 +71,12 @@ class SnapshotStore:
     ) -> dict:
         """Write df as the new snapshot of <stage> and commit it.
 
-        ``bucket_by=(n, col)`` emulates Iceberg's ``bucket(n, col)``
-        partition transform (G5: hash-partition nodes/edges on canonical
-        entity id) via an explicit pmod(hash) partition column — keeps
-        co-located joins co-located on re-read.
+        ``bucket_by=(n, col)`` lays the files out like Iceberg's
+        ``bucket(n, col)`` partition transform (G5: nodes/edges by
+        canonical entity id): one directory per pmod(xxhash64(col), n)
+        value. Only the on-disk layout: :meth:`load` drops the
+        ``bucket`` column and a directory-partitioned parquet carries no
+        bucket spec, so a join on the re-read table still shuffles.
         """
         from pyspark.sql import functions as F
 

@@ -2,11 +2,12 @@
 
 * resolve.candidate_pairs' broadcast plan (band join → dropDuplicates
   with explicit broadcast hints) vs its forced-fallback shuffled plan,
-  with a bucket cap that drops hot buckets and one that drops none. (The
-  in-process pair kernel both minhash blockers' small paths use is
-  pinned against a brute force in tests/test_minhash_kernel.py.)
-* simhash_near_duplicates / binary_hash_pairs first_shared_band16
-  emit-once vs a BRUTE-FORCE all-pairs Hamming scan — at max_hamming ≤ 3
+  with a bucket cap that drops hot buckets and one that drops none, and
+  both against the in-process pair kernel the driver branches run (that
+  kernel is pinned against a brute force in tests/test_minhash_kernel.py).
+* simhash_near_duplicates / binary_hash_pairs (the one Hamming blocker,
+  plans/sizing.hamming_band_pairs) first-shared-band emit-once vs a
+  BRUTE-FORCE all-pairs Hamming scan — at max_hamming ≤ 3
   the 4×16-bit banding is lossless (pigeonhole: ≤3 differing bits leave
   ≥1 band untouched), so banded output must EQUAL brute output exactly,
   with no duplicate (a, b) rows; a band-layout bug would silently drop
@@ -45,10 +46,32 @@ def _pairs(rx, bands, keys, cap):
     return pairs, _plan(out)
 
 
+def _kernel_pairs(rx, keys, cap):
+    """The in-process pair kernel the driver branches run
+    (``core.minhash.bucket_index`` + ``bucket_pairs``) over the collected
+    band-hash matrix, rows sorted by key_id so ``ia < ib`` ⇔ key_a < key_b."""
+    from anno_spark.core.minhash import bucket_index, bucket_pairs
+
+    rows = sorted(
+        (r["key_id"], r["band_hashes"]) for r in rx.band_signatures(keys).collect()
+    )
+    kid = np.array([k for k, _ in rows], dtype=np.int64)
+    bh = np.array([h for _, h in rows], dtype=np.int64)
+    n, n_bands = bh.shape
+    ia, ib = bucket_pairs(
+        bucket_index(bh, cap),
+        np.repeat(np.arange(n), n_bands),
+        np.tile(np.arange(n_bands), n),
+    )
+    return set(zip(kid[ia].tolist(), kid[ib].tolist()))
+
+
 def _broadcast_vs_forced(spark, monkeypatch, cap):
     """candidate_pairs' pair set on the broadcast plan and on the
     shuffled plan the forced-fallback sweep selects; both dedup with
-    the (key_a, key_b) aggregate, only the first broadcasts."""
+    the (key_a, key_b) aggregate, only the first broadcasts. The shared
+    JVM band join, cap included, must also give the in-process kernel's
+    pair set."""
     from anno_spark.operators import resolve as rx
 
     keys = rx.surface_keys(_mentions(spark)).localCheckpoint()
@@ -59,6 +82,7 @@ def _broadcast_vs_forced(spark, monkeypatch, cap):
         m.setenv("SPARK_GRAFT_FORCE_FALLBACK", "1")
         forced, forced_plan = _pairs(rx, bands, keys, cap)
     assert PAIR_DEDUP.search(forced_plan), forced_plan
+    assert small == _kernel_pairs(rx, keys, cap)
     return small, forced
 
 

@@ -264,3 +264,20 @@ class TestMillionAliasKb:
         for i in ids:
             s = f"{_STEMS[i % 10]} {_SECTORS[i % 5]} {i:06d}"
             assert by_surface.get(s) == f"Q{i:06d}", s
+
+
+def test_per_row_estimates_cover_measured_broadcast_bytes():
+    """The KB-side byte gates use per-row estimates at least as large as
+    the broadcast hash relations measured on the 10^6-alias KB (postings
+    148.6, alias band rows 107, aliases 167.8 B/row). At the measured
+    rate a KB with 2·10⁶ posting rows broadcasts ~297 MB, over the
+    256 MiB budget, so its postings must not pass the gate."""
+    from anno_spark.operators.linking import (
+        ALIAS_BYTES_EST,
+        BAND_BYTES_EST,
+        POSTING_BYTES_EST,
+    )
+    from anno_spark.plans.sizing import fits_broadcast
+
+    assert (POSTING_BYTES_EST, BAND_BYTES_EST, ALIAS_BYTES_EST) >= (149, 107, 168)
+    assert not fits_broadcast(2_000_000, POSTING_BYTES_EST)
