@@ -23,8 +23,11 @@ hashes only); :func:`compute_signature` is its row 0 for one text.
 :func:`bucket_index` + :func:`bucket_pairs` are the one in-process way
 to turn a band-hash matrix into distinct candidate pairs (bucket cap
 applied, each pair emitted once); :func:`scored_pairs` adds the
-estimated-Jaccard score in bounded chunks. The CDCR driver branch and
-document near-dup's driver and broadcast-UDF tiers use them.
+estimated-Jaccard score in bounded chunks. Work is cut by the pair
+visits of each (row, band) entry (:func:`entry_visits`,
+:func:`visit_bounds`): scored_pairs' chunks, and the equal-visit slices
+of document near-dup's spread scorer. The CDCR driver branch and
+document near-dup's small tier (in-process or spread scoring) use them.
 """
 
 from __future__ import annotations
@@ -260,6 +263,43 @@ def bucket_index(bh, cap: int | None = None) -> BucketIndex:
     )
 
 
+def band_entries(lo: int, hi: int, n_bands: int):
+    """Entries ``lo`` .. ``hi`` - 1 of the row-major (row, band) grid →
+    ``(ii, band)`` arrays; ``band_entries(0, n * n_bands, n_bands)`` is
+    every band of every row."""
+    import numpy as np
+
+    j = np.arange(lo, hi, dtype=np.int64)
+    return j // n_bands, j % n_bands
+
+
+def entry_visits(index: BucketIndex, ii, band):
+    """Pair visits of each (row ``ii[j]``, band ``band[j]``) entry of
+    :func:`bucket_pairs`: its strictly-greater partners in its kept
+    bucket, 0 where the cap dropped the bucket. Over every entry of the
+    index they sum to :meth:`BucketIndex.pair_visits`."""
+    import numpy as np
+
+    _, _, blen, bucket_of, rank_of = index
+    ord_ = bucket_of[ii, band]
+    visits = np.zeros(len(ii), dtype=np.int64)
+    ok = ord_ >= 0
+    visits[ok] = blen[ord_[ok]] - rank_of[ii[ok], band[ok]] - 1
+    return visits
+
+
+def visit_bounds(visits, step: int):
+    """Entry bounds ``[0, ..., len(visits)]`` that cut consecutive
+    entries into slices of about ``step`` pair visits each (an entry is
+    never split, so one hot entry may make its slice longer)."""
+    import numpy as np
+
+    cum = np.cumsum(visits)
+    total = int(cum[-1]) if len(cum) else 0
+    cuts = np.searchsorted(cum, np.arange(step, total, step), side="right")
+    return np.r_[0, cuts, len(visits)]
+
+
 def bucket_pairs(index: BucketIndex, ii, band):
     """Emit-once pair expansion: each (row ``ii[j]``, band ``band[j]``)
     expands to its strictly-greater partners in that row's kept bucket,
@@ -311,17 +351,7 @@ def scored_pairs(index: BucketIndex, sig, ii, band, threshold: float | None):
     makes each column gather contiguous."""
     import numpy as np
 
-    flat, boff, blen, bucket_of, rank_of = index
-    ord_ = bucket_of[ii, band]
-    visits = np.zeros(len(ii), dtype=np.int64)
-    ok = ord_ >= 0
-    visits[ok] = blen[ord_[ok]] - rank_of[ii[ok], band[ok]] - 1
-    cum = np.cumsum(visits)
-    total = int(cum[-1]) if len(cum) else 0
-    cuts = np.searchsorted(
-        cum, np.arange(SCORE_CHUNK_VISITS, total, SCORE_CHUNK_VISITS), side="right"
-    )
-    bounds = np.r_[0, cuts, len(ii)]
+    bounds = visit_bounds(entry_visits(index, ii, band), SCORE_CHUNK_VISITS)
     sig_len = sig.shape[1]
     out_a, out_b, out_est = [], [], []
     for lo, hi in zip(bounds[:-1], bounds[1:]):

@@ -24,10 +24,12 @@ The JVM joins are the two shared ones in ``plans/sizing.py``: the band
 self-join (minhash's shuffled tier) and the Hamming blocker (simhash;
 embedding near-dup through ``simsearch.binary_hash_pairs``).
 
-Minhash near-dup has three tiers, each gated on the work it would do:
-driver (one collect of the signature table; pairs, scores and clusters
-in driver memory), broadcast UDF (the bucket index broadcast to a fused,
-spread pair scorer) and shuffled join (band self-join, distributed CC).
+Minhash near-dup has two tiers, split by a byte gate. The small tier
+makes one collect of the signature table, one bucket index and one
+driver cluster assembly; its only choice is where the pairs are scored:
+in driver memory, or, past a pair-visit gate, on one Python task per
+core over equal-visit slices of the broadcast index. The shuffled tier
+runs the band self-join and distributed CC.
 """
 
 from __future__ import annotations
@@ -45,9 +47,7 @@ from anno_spark.plans.sizing import (
     band_self_join,
     checkpoint_count,
     fits_broadcast,
-    force_fallback,
     hamming_band_pairs,
-    probe_spread,
 )
 
 from .resolve import DRIVER_CC_MAX_EDGES, connected_components, uf_labels
@@ -124,7 +124,8 @@ DOC_ROWS_PER_BAND = 4
 DOC_SIG_LEN = DOC_NUM_BANDS * DOC_ROWS_PER_BAND
 # per-doc estimate of a small path's driver payload (ids, signature and
 # band-hash matrices, bucket index ≈ 580 B/doc) with headroom, for the
-# byte gate of the driver and broadcast-UDF tiers
+# byte gate of the small tier: its one collect and its bucket index,
+# which the spread scorer broadcasts (~305k docs fit)
 DOC_SMALL_PATH_ROW_BYTES = DOC_NUM_BANDS * 24 + 2 * (DOC_SIG_LEN + DOC_NUM_BANDS) * 8 + 48
 # LSH buckets with more members are dropped for candidate generation
 DOC_MAX_BUCKET_SIZE = 1000
@@ -153,33 +154,6 @@ def doc_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _pair_gen_score_udf(bc, threshold: float | None):
-    """The broadcast-UDF tier's fused pair generation + emit-once +
-    est-Jaccard scoring: each input ``(doc_id, band)`` row expands to its
-    bucket partners through :func:`anno_spark.core.minhash.scored_pairs`
-    (each distinct pair once, from its first shared kept band) against
-    the broadcast ``(sorted_ids, sig_matrix, bucket_index)``, so no JVM
-    band self-join or pairs-proportional Arrow export exists.
-    ``threshold`` None keeps every pair."""
-    import numpy as np
-
-    from anno_spark.core.minhash import scored_pairs
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, sig, index = bc.value
-        for pdf in batches:
-            ii = np.searchsorted(ids, pdf["doc_id"].to_numpy())
-            ia, ib, est = scored_pairs(
-                index, sig, ii, pdf["band"].to_numpy(), threshold
-            )
-            if len(ia):
-                yield pd.DataFrame(
-                    {"doc_a": ids[ia], "doc_b": ids[ib], "est_jaccard": est}
-                )
-
-    return gen
-
-
 def _int_matrix(col: pd.Series, width: int):
     """A collected array<bigint> column → (rows, width) int64 (shape kept
     on 0 rows, where np.array([]) would be 1-D)."""
@@ -188,19 +162,73 @@ def _int_matrix(col: pd.Series, width: int):
     return np.array(col.tolist(), dtype=np.int64).reshape(len(col), width)
 
 
-def _collect_sig_matrices(sigs: DataFrame):
-    """(sorted_ids, sig_matrix, band_hash_matrix) as numpy arrays,
-    collected once from the (checkpointed) signature table for the
-    broadcast-UDF tier."""
+def _signature_index(rows: pd.DataFrame, max_bucket_size: int | None):
+    """Collected (doc_id, signature, band_hashes) rows → ``(ids, sig,
+    index)`` in doc_id order, so every pair comes out as doc_a < doc_b:
+    the ids, the signature matrix in Fortran order (each column
+    ``scored_pairs`` compares is one contiguous array) and the capped
+    bucket index of the band hashes
+    (:func:`anno_spark.core.minhash.bucket_index`)."""
     import numpy as np
 
-    pdf = sigs.select("doc_id", "signature", "band_hashes").toPandas()
-    order = np.argsort(pdf["doc_id"].to_numpy(), kind="mergesort")
-    ids = pdf["doc_id"].to_numpy()[order]
-    # Fortran order: each signature column scored_pairs compares is
-    # one contiguous array
-    sig = np.asfortranarray(_int_matrix(pdf["signature"], DOC_SIG_LEN)[order])
-    return ids, sig, _int_matrix(pdf["band_hashes"], DOC_NUM_BANDS)[order]
+    from anno_spark.core.minhash import bucket_index
+
+    did = rows["doc_id"].to_numpy(np.int64)
+    order = np.argsort(did, kind="stable")
+    sig = np.asfortranarray(_int_matrix(rows["signature"], DOC_SIG_LEN)[order])
+    bh = _int_matrix(rows["band_hashes"], DOC_NUM_BANDS)[order]
+    return did[order], sig, bucket_index(bh, max_bucket_size)
+
+
+def _slice_scorer(bc, threshold: float | None):
+    """The spread scorer's Python task: input row ``id`` = k scores slice
+    k of the broadcast ``(ids, sig, index, bounds)``, the (row, band)
+    entries ``bounds[k]`` .. ``bounds[k + 1]`` - 1, through
+    :func:`anno_spark.core.minhash.scored_pairs` (each distinct pair
+    once, from its first shared kept band). ``threshold`` None keeps
+    every pair."""
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from anno_spark.core.minhash import band_entries, scored_pairs
+
+        ids, sig, index, bounds = bc.value
+        for pdf in batches:
+            for k in pdf["id"]:
+                if k + 1 >= len(bounds):
+                    continue
+                ii, band = band_entries(bounds[k], bounds[k + 1], DOC_NUM_BANDS)
+                ia, ib, est = scored_pairs(index, sig, ii, band, threshold)
+                if len(ia):
+                    yield pd.DataFrame(
+                        {"doc_a": ids[ia], "doc_b": ids[ib], "est_jaccard": est}
+                    )
+
+    return score
+
+
+def _spread_scored(spark, ids, sig, index, threshold: float | None) -> DataFrame:
+    """The spread scorer over the driver's ``(ids, sig, index)`` (see
+    :func:`_signature_index`) → (doc_a, doc_b, est_jaccard), each
+    distinct pair once. The driver cuts the (row, band) entries into
+    ``defaultParallelism`` slices of equal pair visits
+    (:func:`anno_spark.core.minhash.visit_bounds`) and broadcasts the
+    index with the cuts; ``spark.range(par)`` then runs one Python task
+    per slice. No band self-join or shuffle runs, a hot bucket's pairs
+    spread over every slot, and the stage pays the Python worker
+    start-up once per core."""
+    from anno_spark.core.minhash import band_entries, entry_visits, visit_bounds
+
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    visits = entry_visits(
+        index, *band_entries(0, len(ids) * DOC_NUM_BANDS, DOC_NUM_BANDS)
+    )
+    bounds = visit_bounds(visits, max(1, -(-int(visits.sum()) // par)))
+    bc = sc.broadcast((ids, sig, index, bounds))
+    return spark.range(par, numPartitions=par).mapInPandas(
+        _slice_scorer(bc, threshold),
+        schema="doc_a bigint, doc_b bigint, est_jaccard double",
+    )
 
 
 def minhash_candidate_pairs(
@@ -208,23 +236,19 @@ def minhash_candidate_pairs(
     max_bucket_size: int | None = DOC_MAX_BUCKET_SIZE,
     min_est_jaccard: float | None = None,
 ) -> DataFrame:
-    """LSH buckets → candidate (doc_a, doc_b) pairs with estimated
-    Jaccard = fraction of agreeing signature rows; buckets with more than
-    ``max_bucket_size`` members are dropped for candidate generation;
-    ``min_est_jaccard`` None keeps every candidate. Two of the three
-    near-dup tiers (``minhash_near_duplicates`` answers its small inputs
-    from driver memory, the first tier, before calling this):
+    """LSH buckets → candidate (doc_a, doc_b) pairs, doc_a < doc_b, with
+    estimated Jaccard = fraction of agreeing signature rows; buckets with
+    more than ``max_bucket_size`` members are dropped for candidate
+    generation; ``min_est_jaccard`` None keeps every candidate. Two
+    paths, gated on ESTIMATED BYTES (rows × the band/signature geometry,
+    ADVICE r02: a wide config can blow the broadcast under any fixed
+    doc-count gate):
 
-    Broadcast UDF — the docs fit a broadcast, gated on ESTIMATED BYTES
-    (rows × the band/signature geometry, ADVICE r02: a wide config can
-    blow the broadcast under any fixed doc-count gate): the signature
-    and band-hash matrices are collected once, the driver builds the
-    capped bucket index (:func:`anno_spark.core.minhash.bucket_index`)
-    and broadcasts it, and one fused python stage over the round-robin-
-    spread ``(doc_id, band)`` rows expands, dedups (emit-once) and scores
-    the pairs (:func:`anno_spark.core.minhash.scored_pairs`). No band
-    self-join runs, and hot buckets parallelize across all slots instead
-    of landing in one join task.
+    Small — one collect of the signature table, the driver's capped
+    bucket index, then :func:`_spread_scored`: the pairs are expanded,
+    dedup'd (emit-once) and scored on ``defaultParallelism`` Python
+    tasks of equal pair visits. ``minhash_near_duplicates``' small tier
+    uses the same scorer.
 
     Shuffled join (web scale): the shared band self-join
     (:func:`anno_spark.plans.sizing.band_self_join`, bucket cap as a
@@ -235,24 +259,13 @@ def minhash_candidate_pairs(
     """
     # one job: lazy checkpoint + exact count (VERDICT r02 wrong #4)
     sigs, n_docs = checkpoint_count(sigs)
+    if fits_broadcast(n_docs, DOC_SMALL_PATH_ROW_BYTES):
+        rows = sigs.select("doc_id", "signature", "band_hashes").toPandas()
+        ids, sig, index = _signature_index(rows, max_bucket_size)
+        return _spread_scored(sigs.sparkSession, ids, sig, index, min_est_jaccard)
     bands = sigs.select(
         "doc_id", F.posexplode("band_hashes").alias("band", "band_hash")
     )
-    if fits_broadcast(n_docs, DOC_SMALL_PATH_ROW_BYTES):
-        from anno_spark.core.minhash import bucket_index
-
-        ids, sig, bh = _collect_sig_matrices(sigs)
-        bc = sigs.sparkSession.sparkContext.broadcast(
-            (ids, sig, bucket_index(bh, max_bucket_size))
-        )
-        par = sigs.sparkSession.sparkContext.defaultParallelism
-        src = bands.select("doc_id", "band").repartition(
-            probe_spread(par, n_docs * DOC_NUM_BANDS)
-        )
-        return src.mapInPandas(
-            _pair_gen_score_udf(bc, min_est_jaccard),
-            schema="doc_a bigint, doc_b bigint, est_jaccard double",
-        )
     raw = band_self_join(
         bands, "doc_id", ("doc_a", "doc_b"), small=False, n_rows=0,
         max_bucket_size=max_bucket_size,
@@ -289,21 +302,16 @@ def doc_signatures_with_id(docs: DataFrame, text_col: str = "text") -> DataFrame
     )
 
 
-# Doc-count gate for the driver tier and the driver cluster assembly in
-# minhash_near_duplicates: the doc → signature collect is 16 B per doc
-# (doc_id, sig_id), so 1M docs ≈ 16 MB — comparable to a broadcast side.
-# Past it the distributed fan-out runs.
-DRIVER_CLUSTER_MAX_DOCS = 1_000_000
-
-# Work gate of minhash_near_duplicates' driver tier, on the bucket index
-# of the collected representatives: Σ C(|bucket|, 2) pair visits of the
-# emit-once expansion, an upper bound on its candidates and edges. Held
-# at DRIVER_CC_MAX_EDGES, so that edge gate is implied: the measured
-# crossover lies above it. On page texts (local[4] on a 4-core host, 3g
-# driver heap, wall incl. the output count, best of 3) the driver tier
-# took 0.57 / 1.26 / 2.05 / 2.15 / 3.20 s at 0.95 / 3.8 / 6.2 / 8.1 /
-# 10.7M visits and the broadcast-UDF tier 2.00 / 3.13 / 4.56 / 5.23 /
-# 6.56 s. Past it the broadcast-UDF tier spreads the expansion.
+# Where minhash_near_duplicates' small tier scores its pairs, gated on
+# its bucket index of representatives: Σ C(|bucket|, 2) pair visits of
+# the emit-once expansion, an upper bound on its candidates and edges.
+# At or under it the pairs are scored in-process; past it the spread
+# scorer runs. Held at DRIVER_CC_MAX_EDGES, so in-process edges always
+# fit that edge gate; the measured crossover lies near it. On page texts
+# (local[4] on a 4-core host, signatures checkpointed, wall incl. the
+# output count, best of 3) in-process scoring took 0.62 / 0.82 / 1.68 /
+# 2.72 s at 0.79 / 3.3 / 8.6 / 14.4M visits, the spread scorer 1.03 /
+# 0.84 / 1.43 / 2.01 s.
 DRIVER_DEDUP_MAX_PAIR_VISITS = DRIVER_CC_MAX_EDGES
 
 
@@ -327,8 +335,7 @@ def _cluster_frame(spark, did_s, first, edge_a, edge_b) -> DataFrame:
     relation: component = min representative doc reachable, docs fan out
     through their signature group, clusters are doc-count > 1 (a
     signature group with >1 doc clusters even when its representative
-    has no edge). Same output as the distributed CC + join + groupBy
-    tail."""
+    has no edge). Same output as :func:`_distributed_clusters`."""
     import numpy as np
 
     uniq, labels = uf_labels(edge_a, edge_b)
@@ -347,38 +354,61 @@ def _cluster_frame(spark, did_s, first, edge_a, edge_b) -> DataFrame:
     return spark.createDataFrame(out, schema="cluster_id bigint, doc_id bigint")
 
 
-def _driver_near_duplicates(sigs: DataFrame, threshold: float) -> DataFrame | None:
-    """The driver tier, from ONE collect of the signature table: the
-    representatives (min doc_id per sig_id), their capped bucket index,
-    the emit-once pairs scored in-process
-    (:func:`anno_spark.core.minhash.scored_pairs`), then
-    :func:`_cluster_frame`. None when the pair visits exceed
-    ``DRIVER_DEDUP_MAX_PAIR_VISITS``: the caller then runs the
-    broadcast-UDF tier."""
+def _distributed_clusters(sigs: DataFrame, reps: DataFrame, edges: DataFrame) -> DataFrame:
+    """The distributed tail: :func:`connected_components` over the
+    representatives ``reps`` (sig_id, doc_id) and their ``edges``
+    (doc_a, doc_b), each doc → its signature's representative →
+    component, then the cluster-size filter as joins. Signature groups
+    with >1 doc are clusters even when the representative has no edge."""
+    comps = connected_components(
+        reps.select(F.col("doc_id").alias("key_id")),
+        edges.select(F.col("doc_a").alias("key_a"), F.col("doc_b").alias("key_b")),
+    )
+    rep_comp = reps.select(F.col("doc_id").alias("rep_doc"), "sig_id").join(
+        comps.withColumnRenamed("key_id", "rep_doc"), "rep_doc"
+    )
+    all_docs = sigs.select("doc_id", "sig_id").join(rep_comp, "sig_id")
+    return _multi_doc_clusters(
+        all_docs.select(F.col("component_id").alias("cluster_id"), "doc_id")
+    )
+
+
+def _small_near_duplicates(sigs: DataFrame, threshold: float) -> DataFrame:
+    """The small tier, from ONE collect of the signature table: the
+    representatives (min doc_id per sig_id, :func:`_signature_groups`),
+    their one bucket index (:func:`_signature_index`), the edges, then
+    :func:`_cluster_frame`. The edges are scored in-process
+    (:func:`anno_spark.core.minhash.scored_pairs`; no broadcast, no
+    Python worker) at ≤ ``DRIVER_DEDUP_MAX_PAIR_VISITS`` pair visits,
+    else by :func:`_spread_scored` and collected once; more than
+    ``DRIVER_CC_MAX_EDGES`` of those go to :func:`_distributed_clusters`
+    instead."""
     import numpy as np
 
-    from anno_spark.core.minhash import bucket_index, scored_pairs
+    from anno_spark.core.minhash import band_entries, scored_pairs
 
+    spark = sigs.sparkSession
     pdf = sigs.select("doc_id", "sig_id", "signature", "band_hashes").toPandas()
     did = pdf["doc_id"].to_numpy(np.int64)
     order, first = _signature_groups(did, pdf["sig_id"].to_numpy(np.int64))
-    reps = order[first]
-    rep_pdf = pdf.iloc[reps]
-    index = bucket_index(
-        _int_matrix(rep_pdf["band_hashes"], DOC_NUM_BANDS), DOC_MAX_BUCKET_SIZE
-    )
-    if index.pair_visits() > DRIVER_DEDUP_MAX_PAIR_VISITS:
-        return None
-    n = len(reps)
-    ia, ib, _ = scored_pairs(
-        index,
-        np.asfortranarray(_int_matrix(rep_pdf["signature"], DOC_SIG_LEN)),
-        np.repeat(np.arange(n), DOC_NUM_BANDS),
-        np.tile(np.arange(DOC_NUM_BANDS), n),
-        threshold,
-    )
-    rep_ids = did[reps]
-    return _cluster_frame(sigs.sparkSession, did[order], first, rep_ids[ia], rep_ids[ib])
+    reps = pdf.iloc[order[first]]
+    ids, sig, index = _signature_index(reps, DOC_MAX_BUCKET_SIZE)
+    if index.pair_visits() <= DRIVER_DEDUP_MAX_PAIR_VISITS:
+        entries = band_entries(0, len(ids) * DOC_NUM_BANDS, DOC_NUM_BANDS)
+        ia, ib, _ = scored_pairs(index, sig, *entries, threshold)
+        edge_a, edge_b = ids[ia], ids[ib]
+    else:
+        edges, n_edges = checkpoint_count(
+            _spread_scored(spark, ids, sig, index, threshold).select("doc_a", "doc_b")
+        )
+        if n_edges > DRIVER_CC_MAX_EDGES:
+            rep_rows = spark.createDataFrame(
+                reps[["sig_id", "doc_id"]], schema="sig_id bigint, doc_id bigint"
+            )
+            return _distributed_clusters(sigs, rep_rows, edges)
+        e = edges.toPandas()
+        edge_a, edge_b = e["doc_a"].to_numpy(np.int64), e["doc_b"].to_numpy(np.int64)
+    return _cluster_frame(spark, did[order], first, edge_a, edge_b)
 
 
 def minhash_near_duplicates(
@@ -398,35 +428,28 @@ def minhash_near_duplicates(
     ids back out by signature. On corpora with heavy duplication this
     shrinks the quadratic stage by orders of magnitude.
 
-    Three tiers, chosen by gates on the doc count, the bytes and the
-    pair work:
+    Two tiers, chosen by the byte gate on the doc count:
 
-    * driver — ≤ ``DRIVER_CLUSTER_MAX_DOCS`` docs within the byte gate
-      and ≤ ``DRIVER_DEDUP_MAX_PAIR_VISITS`` pair visits: one collect of
-      the signature table, then pairs, scores, union-find and fan-out in
-      driver memory (:func:`_driver_near_duplicates`); no broadcast and
-      no Python worker.
-    * broadcast UDF — pairs from :func:`minhash_candidate_pairs`' fused
-      scorer, checkpointed; the driver assembles the clusters when the
-      edges fit ``DRIVER_CC_MAX_EDGES`` and the doc gate holds.
-    * shuffled join — :func:`connected_components` on the scored pairs,
-      then the fan-out and cluster-size filter as joins.
+    * small — within ``fits_broadcast(n_docs, DOC_SMALL_PATH_ROW_BYTES)``
+      (~305k docs): :func:`_small_near_duplicates`, one collect, one
+      bucket index and one driver cluster assembly; the pairs are scored
+      in-process or, past ``DRIVER_DEDUP_MAX_PAIR_VISITS``, by the
+      spread scorer.
+    * shuffled — over the gate, or under ``SPARK_GRAFT_FORCE_FALLBACK``:
+      representatives by a ``groupBy``, :func:`minhash_candidate_pairs`
+      on them, then :func:`_distributed_clusters`, the tail the small
+      tier's edge overflow also takes.
 
     ``sigs`` (doc_id, signature, band_hashes, sig_id) may be passed in
     precomputed (the driver queries materialize it for the oracle).
     """
-    import numpy as np
-
     if sigs is None:
         sigs = doc_signatures_with_id(docs, text_col)
     # one job materializes the signature cache and yields the doc count
-    # for the gates below
+    # for the byte gate
     sigs, n_docs = checkpoint_count(sigs)
-    driver = n_docs <= DRIVER_CLUSTER_MAX_DOCS and not force_fallback()
-    if driver and fits_broadcast(n_docs, DOC_SMALL_PATH_ROW_BYTES):
-        out = _driver_near_duplicates(sigs, threshold)
-        if out is not None:
-            return out
+    if fits_broadcast(n_docs, DOC_SMALL_PATH_ROW_BYTES):
+        return _small_near_duplicates(sigs, threshold)
     reps = (
         sigs.groupBy("sig_id")
         .agg(
@@ -436,41 +459,8 @@ def minhash_near_duplicates(
         )
         .select("sig_id", "doc_id", "signature", "band_hashes")
     )
-    pairs = minhash_candidate_pairs(
-        reps.drop("sig_id"), min_est_jaccard=threshold
-    )
-    if driver:
-        edges_ck, n_edges = checkpoint_count(pairs.select("doc_a", "doc_b"))
-        if n_edges <= DRIVER_CC_MAX_EDGES:
-            # driver cluster assembly: everything past the scored pair
-            # table is small by the gates that admitted this branch
-            # (edges ≤ the driver-CC cap the distributed path would
-            # collect anyway; doc→sig rows ≤ 16 B each), so two
-            # cache-read collects replace the CC, fan-out and size jobs
-            e = edges_ck.toPandas()
-            ds = sigs.select("doc_id", "sig_id").toPandas()
-            did = ds["doc_id"].to_numpy(np.int64)
-            order, first = _signature_groups(did, ds["sig_id"].to_numpy(np.int64))
-            return _cluster_frame(
-                sigs.sparkSession,
-                did[order],
-                first,
-                e["doc_a"].to_numpy(np.int64),
-                e["doc_b"].to_numpy(np.int64),
-            )
-        pairs = edges_ck
-    rep_edges = pairs.select(F.col("doc_a").alias("key_a"), F.col("doc_b").alias("key_b"))
-    rep_nodes = reps.select(F.col("doc_id").alias("key_id"))
-    comps = connected_components(rep_nodes, rep_edges)
-    # doc → its signature's representative → component; signature groups
-    # with >1 doc are clusters even when the representative has no edge
-    rep_comp = reps.select(F.col("doc_id").alias("rep_doc"), "sig_id").join(
-        comps.withColumnRenamed("key_id", "rep_doc"), "rep_doc"
-    )
-    all_docs = sigs.select("doc_id", "sig_id").join(rep_comp, "sig_id")
-    return _multi_doc_clusters(
-        all_docs.select(F.col("component_id").alias("cluster_id"), "doc_id")
-    )
+    pairs = minhash_candidate_pairs(reps.drop("sig_id"), min_est_jaccard=threshold)
+    return _distributed_clusters(sigs, reps, pairs)
 
 
 # --------------------------------------------------------------------------

@@ -62,8 +62,11 @@ def _gram_postings(df: DataFrame, key_col: str, text_col: str) -> DataFrame:
 def build_kb_index(spark: SparkSession, kb_aliases: DataFrame) -> dict:
     """kb_aliases: (alias, kb_id, description[, prior]) →
     {"postings": broadcastable TF-IDF postings, "idf": gram→idf,
-     "aliases": alias dimension}. IDF fitted on the alias corpus:
-    idf = ln((N+1)/(df+1)) + 1 (smoothed)."""
+     "aliases": alias dimension, "alias_sigs": (alias_id, bh_al) LSH
+    band-hash vectors}. IDF fitted on the alias corpus:
+    idf = ln((N+1)/(df+1)) + 1 (smoothed). The alias band hashes are
+    computed once here, checkpointed, so every :func:`link_candidates`
+    call hashes only its surfaces."""
     # dedup on alias_id (ADVICE r05): duplicate (alias, kb_id) input rows
     # would survive the broadcast emit-once first-shared-band filter and
     # multiply through the alias_sigs join, while the shuffled fallback
@@ -90,10 +93,17 @@ def build_kb_index(spark: SparkSession, kb_aliases: DataFrame) -> dict:
     )
     postings, n_postings = checkpoint_count(postings)
     idf, n_grams = checkpoint_count(idf)
+    aliases = aliases.localCheckpoint()
+    alias_sigs = band_signatures(
+        aliases.select(
+            F.col("alias_id").alias("key_id"), F.col("alias").alias("surface")
+        )
+    ).toDF("alias_id", "bh_al")
     return {
         "postings": postings,
         "idf": idf,
-        "aliases": aliases.localCheckpoint(),
+        "aliases": aliases,
+        "alias_sigs": alias_sigs.localCheckpoint(),
         "n_aliases": n,
         "n_postings": n_postings,
         "n_grams": n_grams,
@@ -118,16 +128,10 @@ def link_candidates(surfaces: DataFrame, kb_index: dict) -> DataFrame:
     the alias's comes back from a second compact broadcast), so no
     candidate-proportional exchange exists. The shuffled 10⁶-alias
     fallback keeps dropDuplicates: there the alias-vector attach would
-    itself shuffle, and AQE owns the plan anyway."""
-    aliases = kb_index["aliases"]
-    alias_for_bands = aliases.select(
-        F.col("alias_id").alias("key_id"),
-        F.col("alias").alias("surface"),
-        F.lit("").alias("entity_type"),
-    )
-    alias_sigs = band_signatures(alias_for_bands).select(
-        F.col("key_id").alias("alias_id"), F.col("band_hashes").alias("bh_al")
-    )
+    itself shuffle, and AQE owns the plan anyway. Either plan reads the
+    alias band hashes ``build_kb_index`` checkpointed; the only Python
+    stage hashes the surfaces."""
+    alias_sigs = kb_index["alias_sigs"]
     alias_bands = alias_sigs.select(
         "alias_id", F.posexplode("bh_al").alias("band", "band_hash")
     )

@@ -641,7 +641,12 @@ def _driver_resolve(
     import numpy as np
 
     from anno_spark.core.document import KNOWN_KB_ENTITIES
-    from anno_spark.core.minhash import band_hash_matrix, bucket_index, bucket_pairs
+    from anno_spark.core.minhash import (
+        band_entries,
+        band_hash_matrix,
+        bucket_index,
+        bucket_pairs,
+    )
 
     has_ts = "first_seen" in keys.columns
     # first_seen travels as epoch microseconds: collect() would hand back
@@ -662,9 +667,7 @@ def _driver_resolve(
     if index.pair_visits() > DRIVER_RESOLVE_MAX_PAIRS:
         return None
     ia, ib = bucket_pairs(
-        index,
-        np.repeat(np.arange(n), CDCR_NUM_BANDS),
-        np.tile(np.arange(CDCR_NUM_BANDS), n),
+        index, *band_entries(0, n * CDCR_NUM_BANDS, CDCR_NUM_BANDS)
     )
     edges = pd.DataFrame(
         _driver_scored_pairs(krows, ia, ib, min_similarity, require_type_match),

@@ -14,10 +14,11 @@ web-scale join. Two JVM joins serve all of them:
   64-bit hash column (simhash near-dup, binary-hash ANN): bands derived
   in the JVM, emit-once on the first shared band, Hamming filter.
 
-Document minhash near-dup's driver and broadcast-UDF tiers and the CDCR
-resolver's driver branch run the one in-process pair kernel instead
-(``core.minhash.bucket_index`` / ``bucket_pairs``, bucket cap applied
-inside the index).
+Document minhash near-dup's small tier (pairs scored in driver memory,
+or by a spread scorer over equal-visit slices of the broadcast index)
+and the CDCR resolver's driver branch run the one in-process pair
+kernel instead (``core.minhash.bucket_index`` / ``bucket_pairs``, bucket
+cap applied inside the index).
 
 :func:`checkpoint_count` is the gate's one Spark job: a LAZY
 localCheckpoint whose first action is the exact ``count()``, so the job

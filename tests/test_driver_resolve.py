@@ -7,11 +7,14 @@ under a session time zone other than the process's, and on empty input;
 that the driver branch runs only its count and collect and returns local
 relations; and that a hot bucket under the key gate trips the pair-count
 gate instead of the Python pair loop. Plus document minhash near-dup's
-three tiers (driver, broadcast UDF, shuffled) against each other."""
+tiers (in-process or spread scoring with driver cluster assembly, the
+distributed tail, the shuffled fallback) against each other, the work
+of the spread scorer, and the dedup oracles on it."""
 
 from __future__ import annotations
 
 import datetime
+import random
 import zoneinfo
 
 import pytest
@@ -219,6 +222,36 @@ def test_cdcr_oracles_match_on_distributed_branch(spark, sf_dir, duck, monkeypat
         materialize.reset()
 
 
+def test_dedup_oracles_match_on_spread_scorer(spark, sf_dir, duck, monkeypatch):
+    """The oracled minhash dedup queries with the pair-visit gate at 0:
+    test_oracle_match checks the small tier's in-process scoring at the
+    test scale and the forced-fallback sweep its shuffled tier; this
+    checks the spread scorer, the branch larger corpora (the bench's
+    sf1.0 documents) take, against the same DuckDB oracles."""
+    from test_oracle_parity import test_oracle_match
+
+    import anno_spark.operators.dedup as dd
+    from anno_spark.plans import materialize
+
+    spread = []
+    scorer = dd._spread_scored
+
+    def spy(*args, **kwargs):
+        spread.append(1)
+        return scorer(*args, **kwargs)
+
+    monkeypatch.setattr(dd, "DRIVER_DEDUP_MAX_PAIR_VISITS", 0)
+    monkeypatch.setattr(dd, "_spread_scored", spy)
+    materialize.reset()
+    try:
+        for name in ("dedup_minhash", "dedup_bcubed"):
+            spread.clear()
+            test_oracle_match(spark, sf_dir, duck, name)
+            assert spread, name
+    finally:
+        materialize.reset()
+
+
 def _near_dup_docs(spark):
     """Near-dup families, identical-signature groups (identical texts,
     and texts that differ only in case, which lowercase to the same
@@ -240,55 +273,171 @@ def _near_dup_docs(spark):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
-def test_minhash_driver_cluster_assembly_matches_distributed(spark, monkeypatch):
-    """The driver tier (in-process pairs + union-find + fan-out), the
-    broadcast-UDF tier (``DRIVER_DEDUP_MAX_PAIR_VISITS = 0``: fused
-    scorer, driver cluster assembly) and the distributed tier
-    (``DRIVER_CLUSTER_MAX_DOCS = -1``: shuffled CC, fan-out and size
-    joins) give the same (cluster_id, doc_id) set, and so does the
-    forced fallback (shuffled band join too); each run is checked to
-    take its branch."""
+def _seeded_docs(seed):
+    """A seeded random corpus: 30 base texts of 12-20 words, each with
+    1-4 variants that swap 0-3 words, so some variants clear the 0.8
+    threshold and some do not; doc ids are drawn at random, so id order
+    is not text order."""
+    rng = random.Random(seed)
+    vocab = [
+        "river", "stone", "market", "window", "signal", "harbor", "copper",
+        "garden", "lantern", "orbit", "velvet", "canyon", "ledger", "meadow",
+        "piston", "quartz", "rocket", "saddle", "timber", "walnut",
+    ]
+    texts = []
+    for _ in range(30):
+        base = [rng.choice(vocab) for _ in range(rng.randint(12, 20))]
+        for _ in range(rng.randint(1, 4)):
+            words = list(base)
+            for _ in range(rng.randint(0, 3)):
+                words[rng.randrange(len(words))] = rng.choice(vocab)
+            texts.append(" ".join(words))
+    ids = rng.sample(range(1, 1_000_000), len(texts))
+    return list(zip(ids, texts))
+
+
+# the tier differential's corpora as (doc_id, text) rows; ``near_dup``
+# is built by _near_dup_docs
+_CORPORA = {
+    "near_dup": None,
+    "empty": [],
+    "one_doc": [(7, "a lone document with nothing like it")],
+    "identical": [(i, "the same mirrored page text") for i in range(40)],
+    "none_texts": [(1, None), (2, None), (3, ""), (4, "short")]
+    + [(10 + i, "a templated page body shared by variants, number " + "x" * i) for i in range(4)],
+    "non_ascii": [(100 + i, t) for i, t in enumerate(NON_ASCII)]
+    + [(200 + i, t + " " + t) for i, t in enumerate(NON_ASCII)]
+    + [(300 + i, t + " " + t) for i, t in enumerate(NON_ASCII)],
+    "seeded_1": _seeded_docs(1),
+    "seeded_2": _seeded_docs(2),
+}
+
+
+@pytest.mark.parametrize("corpus", list(_CORPORA))
+def test_minhash_driver_cluster_assembly_matches_distributed(spark, monkeypatch, corpus):
+    """Every tier of minhash_near_duplicates gives the same (cluster_id,
+    doc_id) set, and each run is checked to take its branch:
+
+    * in-process scoring + driver cluster assembly;
+    * the spread scorer + driver cluster assembly
+      (``DRIVER_DEDUP_MAX_PAIR_VISITS = -1``, so corpora with no pair
+      visits take it too);
+    * the spread scorer + the distributed tail (edge gate forced);
+    * the forced fallback: pairs and scores from the JVM band join, the
+      reference the in-process scorer is held to, and the same tail.
+
+    Corpora: near-dup families with identical-signature groups and a hot
+    bucket over the cap; 0 docs; 1 doc; all docs identical; None texts
+    (read as "", so they group with the empty text); non-ASCII (CJK and
+    supplementary-plane) texts; two seeded random corpora."""
     import anno_spark.operators.dedup as dd
 
-    docs = _near_dup_docs(spark)
+    rows = _CORPORA[corpus]
+    if rows is None:
+        docs = _near_dup_docs(spark)
+    else:
+        docs = spark.createDataFrame(rows, "doc_id bigint, text string")
     ran = []
 
-    def spy(name, fn, tier=None):
+    def spy(name):
+        fn = getattr(dd, name)
+
         def wrapped(*args, **kwargs):
-            out = fn(*args, **kwargs)
-            if tier is None or out is not None:
-                ran.append(tier or name)
-            return out
+            ran.append(name)
+            return fn(*args, **kwargs)
 
         monkeypatch.setattr(dd, name, wrapped)
 
-    spy("_driver_near_duplicates", dd._driver_near_duplicates, "driver")
-    spy("_pair_gen_score_udf", dd._pair_gen_score_udf)
-    spy("connected_components", dd.connected_components)
+    for name in ("_spread_scored", "_cluster_frame", "connected_components"):
+        spy(name)
 
-    def clusters():
+    def clusters(branch):
         ran.clear()
-        return {(r["cluster_id"], r["doc_id"]) for r in dd.minhash_near_duplicates(docs).collect()}
+        out = {(r["cluster_id"], r["doc_id"]) for r in dd.minhash_near_duplicates(docs).collect()}
+        assert ran == branch
+        return out
 
-    driver = clusters()
-    assert ran == ["driver"]
-    monkeypatch.setattr(dd, "DRIVER_DEDUP_MAX_PAIR_VISITS", 0)
-    udf = clusters()
-    assert ran == ["_pair_gen_score_udf"]
-    monkeypatch.setattr(dd, "DRIVER_CLUSTER_MAX_DOCS", -1)
-    distributed = clusters()
-    assert ran == ["_pair_gen_score_udf", "connected_components"]
-    # and every gate "too big": pairs and scores from the JVM band join,
-    # the reference the in-process scorer of the other tiers is held to
+    in_process = clusters(["_cluster_frame"])
+    monkeypatch.setattr(dd, "DRIVER_DEDUP_MAX_PAIR_VISITS", -1)
+    spread = clusters(["_spread_scored", "_cluster_frame"])
+    monkeypatch.setattr(dd, "DRIVER_CC_MAX_EDGES", -1)
+    spread_tail = clusters(["_spread_scored", "connected_components"])
     monkeypatch.setenv("SPARK_GRAFT_FORCE_FALLBACK", "1")
-    shuffled = clusters()
-    assert ran == ["connected_components"]
-    assert driver == udf == distributed == shuffled
-    by_doc = dict((d, c) for c, d in driver)
-    assert by_doc[5000] == by_doc[5001] == by_doc[5002]
-    assert by_doc[5100] == by_doc[5101]
-    # the hot family still clusters through the bands under the cap
-    assert sum(1 for d in by_doc if d >= 20_000) > 1
+    shuffled = clusters(["connected_components"])
+    assert in_process == spread == spread_tail == shuffled
+    by_doc = dict((d, c) for c, d in in_process)
+    if corpus == "near_dup":
+        assert by_doc[5000] == by_doc[5001] == by_doc[5002]
+        assert by_doc[5100] == by_doc[5101]
+        # the hot family still clusters through the bands under the cap
+        assert sum(1 for d in by_doc if d >= 20_000) > 1
+    elif corpus == "identical":
+        assert len(set(by_doc.values())) == 1 and len(by_doc) == 40
+    elif corpus == "none_texts":
+        assert by_doc[1] == by_doc[2] == by_doc[3] and 4 not in by_doc
+    elif corpus in ("empty", "one_doc"):
+        assert not in_process
+    else:
+        assert in_process
+
+
+def test_minhash_spread_tier_runs_one_collect_and_par_tasks(spark, monkeypatch):
+    """With the visit gate at 0 on an eagerly checkpointed signature
+    table, minhash_near_duplicates scores on the spread scorer and runs
+    the gate's count, ONE collect of the signature table, the scorer's
+    checkpointed edge count and the edge collect: 6 jobs at local[8]
+    (AQE runs each count as two), and no groupBy over the signature
+    table. The three-tier code before it ran 12 jobs on the same call: a
+    driver tier that collected and indexed and then declined, a sig_id
+    groupBy, a second collect and index, a band explode spread by
+    round-robin, and a third collect of doc → signature. The scorer's
+    MapInPandas runs exactly ``defaultParallelism`` Python tasks, one
+    per equal-visit slice (counted by an accumulator)."""
+    import anno_spark.operators.dedup as dd
+
+    monkeypatch.setattr(dd, "DRIVER_DEDUP_MAX_PAIR_VISITS", 0)
+    sc = spark.sparkContext
+    tasks = sc.accumulator(0)
+    scorer = dd._slice_scorer
+
+    def counted(bc, threshold):
+        score = scorer(bc, threshold)
+
+        def run(batches):
+            tasks.add(1)
+            yield from score(batches)
+
+        return run
+
+    monkeypatch.setattr(dd, "_slice_scorer", counted)
+    docs = _near_dup_docs(spark)
+    sigs = dd.doc_signatures_with_id(docs).localCheckpoint()
+    group = "test-minhash-spread-tier-jobs"
+    sc.setJobGroup(group, "minhash_near_duplicates, spread scorer")
+    try:
+        out = dd.minhash_near_duplicates(docs, sigs=sigs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < len(jobs) <= 6, sorted(jobs)
+    assert tasks.value == sc.defaultParallelism
+    store = spark._jsparkSession.sharedState().statusStore()
+    executions = store.executionsList()
+    sig_plans = []
+    for i in range(executions.size()):
+        ex = executions.apply(i)
+        ex_jobs = ex.jobs().keySet().toList()
+        plan = ex.physicalPlanDescription()
+        if "signature" in plan and any(
+            ex_jobs.apply(j) in jobs for j in range(ex_jobs.size())
+        ):
+            sig_plans.append(plan)
+    # the gate's count (a keyless aggregate) and the one collect
+    assert len([p for p in sig_plans if "HashAggregate" not in p]) == 1
+    assert not [p for p in sig_plans if "Keys [" in p]
+    assert "LocalTableScan" in out._jdf.queryExecution().executedPlan().toString()
+    assert out.count() > 0
 
 
 def test_minhash_driver_tier_runs_no_python_worker(spark):

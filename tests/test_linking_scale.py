@@ -122,6 +122,26 @@ class TestBigKb:
         )
         assert hits >= 0.8 * len(perturbed), f"perturbed recall {hits}/{len(perturbed)}"
 
+    def test_link_candidates_hashes_only_the_surfaces(
+        self, spark, big_kb_index, monkeypatch
+    ):
+        """build_kb_index hashes the alias bands once, checkpointed: on
+        the broadcast and the shuffled plan alike, link_candidates' only
+        MapInPandas hashes the surfaces. The alias side used to run its
+        own MapInPandas over the whole alias table twice per call, once
+        per broadcast."""
+        from anno_spark.operators import linking
+
+        sample = [r for i, r in enumerate(_kb_rows()) if i % 293 == 0][:40]
+        surfaces = _surfaces(spark, [(a.lower(), "ORG") for a, _, _ in sample])
+        for plan_kind in ("broadcast", "shuffled"):
+            if plan_kind == "shuffled":
+                monkeypatch.setattr(linking, "fits_broadcast", lambda *a, **k: False)
+            cands = linking.link_candidates(surfaces, big_kb_index)
+            plan = cands._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("MapInPandas") == 1, (plan_kind, plan)
+            assert cands.count() > 0, plan_kind
+
     def test_winner_determinism_under_ties(self, spark):
         """The same alias string registered under two kb_ids scores
         identically for an exact surface → the window tie-break must

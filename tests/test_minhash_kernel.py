@@ -16,16 +16,19 @@ import pytest
 
 import anno_spark.core.minhash as mh
 from anno_spark.core.minhash import (
+    band_entries,
     band_hash_matrix,
     band_hashes,
     bucket_index,
     bucket_pairs,
     compute_signature,
+    entry_visits,
     scored_pairs,
     extract_ngrams,
     fnv1a_seeded,
     signature_matrix,
     to_i64,
+    visit_bounds,
 )
 
 
@@ -162,6 +165,33 @@ def test_scored_pairs_match_brute_force(monkeypatch, chunk, threshold):
     assert want and (threshold is None or len(want) < len(_brute(bh, cap)))
     empty = scored_pairs(index, sig, ii[:0], band[:0], threshold)
     assert [len(x) for x in empty] == [0, 0, 0]
+
+
+@pytest.mark.parametrize("n_slices", [1, 3, 8, 64])
+def test_visit_slices_partition_the_pairs(n_slices):
+    """Entry visits sum to the index's pair visits, and equal-visit
+    slices of the (row, band) grid (the spread scorer's cut) expand to
+    disjoint pair sets whose union is the whole expansion: no pair is
+    lost or emitted twice at a slice boundary. Slices hold about
+    total / n_slices visits, give or take one entry."""
+    bh = np.vstack([_hot_bucket(), _seeded(3, 60, 3, 5)])
+    index = bucket_index(bh, 11)
+    n, n_bands = bh.shape
+    visits = entry_visits(index, *band_entries(0, n * n_bands, n_bands))
+    total = int(visits.sum())
+    assert total == index.pair_visits() > 0
+    step = -(-total // n_slices)
+    bounds = visit_bounds(visits, step)
+    assert bounds[0] == 0 and bounds[-1] == n * n_bands
+    assert len(bounds) - 1 <= n_slices and (np.diff(bounds) >= 0).all()
+    seen = []
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        assert visits[lo:hi].sum() <= step + visits.max()
+        ia, ib = bucket_pairs(index, *band_entries(lo, hi, n_bands))
+        seen += list(zip(ia.tolist(), ib.tolist()))
+    assert len(seen) == len(set(seen))
+    assert set(seen) == _brute(bh, 11)
+    assert list(visit_bounds(visits[:0], step)) == [0, 0]
 
 
 def test_band_hash_matrix_matches_reference():

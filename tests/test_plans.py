@@ -167,8 +167,11 @@ class TestSkewProofBandJoins:
         # and in particular no shuffled join a hot bucket could serialize
         assert "MapInPandas" in plan
         assert "SortMergeJoin" not in plan and "Join" not in plan
-        # probe side spread before the explosion
-        assert "RoundRobinPartitioning" in plan or "Exchange RoundRobin" in plan
+        # the fused scorer spread over one task per core (equal-visit
+        # slices of the broadcast index), before the pair explosion
+        par = spark.sparkContext.defaultParallelism
+        assert f"splits={par})" in plan
+        assert pairs.rdd.getNumPartitions() == par
 
     def test_minhash_large_fallback_runs_and_matches(
         self, spark, sf_dir, monkeypatch
@@ -238,12 +241,11 @@ class TestSkewProofBandJoins:
         assert pairs == large and len(pairs) > 0
 
     def test_minhash_small_path_has_no_pair_shuffle(self, spark, sf_dir):
-        """The small path must be map-only past the band explosion: the
-        only Exchange is the fixed-size probe-side round-robin spread of
-        the (doc, band, hash) table — no exchange sits downstream of the
-        band self-join, so shuffle volume is independent of how many
-        candidate pairs explode (the r04 plan still shuffled ~2.4x the
-        distinct-pair count through a dropDuplicates exchange)."""
+        """The small path must be map-only past the band explosion: no
+        hash exchange sits downstream of the pair generation, so shuffle
+        volume is independent of how many candidate pairs explode (the
+        r04 plan still shuffled ~2.4x the distinct-pair count through a
+        dropDuplicates exchange)."""
         import os
         import re
 
